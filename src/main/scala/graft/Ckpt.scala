@@ -4,8 +4,9 @@ import org.apache.spark.sql.Dataset
 
 /** The ONE lineage-truncation policy switch for every iterative
   * kernel in the library (connected components, PageRank, k-core,
-  * HITS, Lloyd rounds, BPE merge rounds, NN-Descent, Holt-Winters
-  * unrolls, …).
+  * HITS, PQ sub-codebook rounds, BPE merge rounds, NN-Descent,
+  * Holt-Winters unrolls, …). Coarse k-means is not among them: its
+  * k-row Lloyd state stays on the driver ([[graft.api.VecKMeans.train]]).
   *
   * Iterative DataFrame algorithms must cut lineage once per round or
   * the plan tree (and closure serialization time) grows without

@@ -209,7 +209,14 @@ object Graph {
     * label) count and the min-struct argmax (never a window keyed by
     * node, so a hot node's tally still combines map-side). Labels
     * are `localCheckpoint`ed per round: lineage stays one round deep
-    * at any iteration count, the pageRank discipline. */
+    * at any iteration count, the pageRank discipline.
+    *
+    * @param symmetric the caller's precondition that `edges` is
+    *   already symmetric (every (a, b) has its (b, a)), deduplicated
+    *   and loop-free. It skips the symmetrize + distinct pass; only
+    *   the cheap self-loop filter still runs. Symmetry and
+    *   duplicates are NOT checked: a one-way or repeated edge
+    *   silently changes the neighbor counts, and so the labels. */
   def labelPropagation(edges: DataFrame, src: String, dst: String,
       iters: Int, symmetric: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters ($iters) must be >= 1")
@@ -223,7 +230,7 @@ object Graph {
     // memo already holds (r18 opt, guide §1.2). Labels are identical
     // by construction; pinned in GraphApiSpec.
     val ue =
-      if (symmetric) e
+      if (symmetric) e.filter(col("src") =!= col("dst"))
       else e.union(e.select(col("dst").as("src"), col("src").as("dst")))
         .filter(col("src") =!= col("dst"))
         .distinct().ckpt()

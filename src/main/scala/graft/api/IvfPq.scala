@@ -67,7 +67,7 @@ object IvfPq {
     // per round instead of ~6·m
     val subs = subVectors(ev, m, subDim).ckpt()
     // seed codes are the RANK among the ksub smallest ids (0..ksub−1),
-    // never a cast of the id value (see VecKMeans.seedCenters) — this
+    // never a cast of the id value (see VecKMeans.train) — this
     // is also what keeps every PQ code < 256 regardless of id space
     val seedIds = ev.orderBy(col("vec_id")).limit(ksub)
       .select(col("vec_id"),
@@ -97,7 +97,7 @@ object IvfPq {
         .select(col("s"), col("code"),
           posexplode(col("sub")).as(Seq("pos", "x")))
         .groupBy(col("s"), col("code"), col("pos"))
-        // 8-place rounding per Lloyd round — the VecKMeans.recenter
+        // 8-place rounding per Lloyd round — the VecKMeans.train
         // discipline: double summation is order-dependent, so without
         // it an engine replaying the rounds sequentially (the DuckDB
         // oracle behind sim_topk_ivfpq) drifts ULPs per round and the

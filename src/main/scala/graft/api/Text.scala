@@ -54,23 +54,6 @@ object Text {
       .write.mode("overwrite").parquet(s"$path/docs")
   }
 
-  /** Add a NEW eval suite's grams to a saved [[evalGramIndexBuild]]
-    * index — suites arrive rarely (a benchmark release), so appends
-    * only touch the new grams' bucket directories. Ids must be new. */
-  def evalGramIndexAppend(newEvalDocs: DataFrame, id: String,
-      text: String, path: String): Unit = {
-    val spark = newEvalDocs.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val (n, nBuckets) = (meta.getAs[Int]("n"), meta.getAs[Int]("n_buckets"))
-    val g = ngrams(newEvalDocs, id, text, n)
-      .select(col(id).as("eval_id"), col("ngram")).distinct()
-    g.withColumn("bkt", evalGramBucket(nBuckets))
-      .write.mode("append").partitionBy("bkt").parquet(s"$path/grams")
-    g.groupBy(col("eval_id"))
-      .agg(sort_array(collect_list(col("ngram"))).as("eg_sorted"))
-      .write.mode("append").parquet(s"$path/docs")
-  }
-
   /** The eval-gram index's posting bucket — a pure function of the
     * gram, so probe and build always agree. */
   private[graft] def evalGramBucket(nBuckets: Int): Column =

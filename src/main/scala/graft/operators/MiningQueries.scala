@@ -80,7 +80,7 @@ object MiningQueries {
     * unrolls power iteration (GraphQueries.scala): seeds are the k
     * smallest vec_ids (cid = rank − 1), each round argmin-assigns on
     * (d2, cid) and recomputes per-dimension means rounded to 8 places
-    * — the SAME rounding VecKMeans.recenter applies, so the two
+    * — the SAME rounding VecKMeans.train applies, so the two
     * engines' centers are identical despite order-dependent double
     * summation. Ends with `cfin AS (cid, c)` — a STABLE alias for the
     * final centers (callers must reference `cfin`, never `c$rounds`,
@@ -146,9 +146,11 @@ object MiningQueries {
     * property-tests the invariants (sizes partition the corpus,
     * assignments are nearest-center, inertia non-increasing).
     *
-    * Scale shape: each round = one broadcast of k centers + two
-    * map-side-combining aggregates; nothing quadratic, no window;
-    * the corpus is scanned once per round (cached). */
+    * Scale shape: each round = one scan of the (cached) corpus
+    * against the driver-held k-center literal + one map-side-combining
+    * aggregate whose k×dims rows return to the driver; the final
+    * assignment is a projection plus the per-cell aggregate. Nothing
+    * quadratic, no window, no broadcast. */
   val miningKmeans: GQuery = {
     val k = 4
     val rounds = 3

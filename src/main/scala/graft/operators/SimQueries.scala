@@ -313,9 +313,9 @@ object SimQueries {
     *
     * Scale shape: both audits read only the indexes' `cid` partition
     * column (parquet metadata, not vector bytes); the rebuild itself
-    * is the offline ivfBuild cost — one scan of the stored cells, k
-    * centers broadcast per Lloyd round — amortized across every
-    * consumer of the republished index. IndexStore stamps both
+    * is the offline ivfBuild cost — one scan of the stored cells per
+    * Lloyd round against the driver-held k centers — amortized across
+    * every consumer of the republished index. IndexStore stamps both
     * artifacts, so the drift+rebuild sequence runs once per corpus
     * generation and re-runs are pure reads (idempotent: the append
     * happens INSIDE the pre index's ensure block, never twice). */

@@ -103,6 +103,13 @@ class GraphApiSpec extends SparkTestBase {
         iters = 2, symmetric = true)
       .as[(Long, Long)].collect().toMap
     assert(donated == got)
+    // the donated path still drops self-loops: a loop-only node
+    // never enters the label set
+    val looped = Graph.labelPropagation(
+        e.distinct().union(Seq((99L, 99L)).toDF("s", "d")), "s", "d",
+        iters = 2, symmetric = true)
+      .as[(Long, Long)].collect().toMap
+    assert(looped == got)
   }
 
   test("triangles counts the clique + star fixture exactly") {

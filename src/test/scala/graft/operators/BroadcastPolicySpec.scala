@@ -41,13 +41,13 @@ class BroadcastPolicySpec extends SparkTestBase {
     "agg_listagg" -> 1,       // region
     "sim_cosine_topk" -> 1,   // probe set: literal filter vec_id < 5
     "sim_topk_lsh" -> 1,      // probe buckets: literal filter vec_id < 50
-    // IVF: k-row center broadcasts per Lloyd round (quantizer training
-    // + index/probe assignment) + the ≤ 50×nProbe probe-cell set
-    "sim_topk_ivf" -> 8,
-    // PQ probe: k-row centers, m·ksub codebooks (twice: encode tables
-    // + probe tables), bounded probe-cell set
-    "sim_topk_ivfpq" -> 6,
-    "mining_kmeans" -> 8,     // k-row center broadcast per Lloyd round
+    // IVF probe: the saved k centers as one codebook row (probe-cell
+    // assignment) + the ≤ 50×nProbe probe-cell set. Quantizer training
+    // keeps its k centers on the driver and broadcasts nothing
+    "sim_topk_ivf" -> 2,
+    // PQ probe: the saved k-center codebook row, the m·ksub codebooks
+    // (probe ADC tables), the bounded probe-cell set
+    "sim_topk_ivfpq" -> 3,
     "mining_assoc_rules" -> 1, // 1-row basket-total scalar
     "text_tfidf_topterm" -> 1, // 1-row corpus-count scalar
     "text_surprisal" -> 1,     // 1-row (N, V) model-size scalar
@@ -64,11 +64,6 @@ class BroadcastPolicySpec extends SparkTestBase {
     // literal-filtered (vec_id < 5) quantized probe set, and the same
     // probe set's float side in the re-rank join
     "sim_topk_sq8" -> 4,
-    // per surviving assignment TWO bounded hints since the argmin
-    // rewrite (the 1-row sorted center-array scalar + the k-row
-    // centers d2-rejoin): final assignment + the train-round tail
-    // that survives the per-round localCheckpoint truncation
-    "dedup_semantic" -> 4,
     // `ranges`-row (8) bucket-base-offset frame from the driver-side
     // prefix sum. (sim_topk_mmr needs NO budget: its bounded probe
     // hint sits behind the shortlist's eager localCheckpoint, so the

@@ -25,13 +25,11 @@ class PlanShapeSpec extends SparkTestBase {
     "text_lang_divergence", // same bounded dictionary cross joins
     "graph_pagerank",   // 1-row node-count scalar cross join per iteration
     "mining_assoc_rules", // 1-row basket-total scalar cross join
-    "mining_kmeans",    // k-row center table broadcast per Lloyd round
-    "sim_topk_ivf",     // same k-row center broadcast (quantizer training + probing)
-    "sim_topk_ivfpq",   // k-row center + m·ksub codebook broadcasts
+    "sim_topk_ivf",     // saved k-center codebook row crossed onto the probes (probe-cell assignment)
+    "sim_topk_ivfpq",   // same codebook row + m·ksub codebook broadcasts
     "sim_topk_sq8",     // int8 shortlist pass: tiny probe set broadcast, quantized corpus streamed
-    "dedup_semantic",   // k-row center broadcast (quantizer training + cell assignment)
     "pipeline_skew_report", // 1-row total/cardinality scalar cross join
-    "sim_range_ivf",    // k-row center broadcast (probe-cell assignment)
+    "sim_range_ivf",    // saved k-center codebook row (probe-cell assignment)
     "sample_temperature", // 1-row (Σ√n, N) total scalar cross join ×2
     "merge_cdc_apply",  // 1-row max(k) scalar cross join (insert keys)
     "ev_gap_fill",      // day spine × bounded distinct type dim

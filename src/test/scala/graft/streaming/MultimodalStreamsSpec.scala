@@ -87,4 +87,33 @@ class MultimodalStreamsSpec extends SparkTestBase {
       }.toSet
     assert(got == direct)
   }
+
+  test("a same-session rebuild from different media is served fresh, " +
+      "never from the previous build's bands memo") {
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_phashidx_rebuild").toString
+    val (mediaA, mediaB) =
+      (media.filter($"doc_id" % 10 === 1), media.filter($"doc_id" % 10 === 2))
+    // byte-identical copies of one payload from each build's media
+    val (copyA, copyB) = (mediaA.orderBy($"doc_id").first(),
+      mediaB.orderBy($"doc_id").first())
+    val arrivals = Seq((900001L, copyA.getAs[Array[Byte]](1)),
+      (900002L, copyB.getAs[Array[Byte]](1))).toDF("doc_id", "payload")
+    // batch serving memoizes the bands (the default cacheStatic path)
+    def serve(): Set[(Long, Long, Int)] =
+      MultimodalStreams.phashAgainstSavedIndex(arrivals, path, "doc_id",
+          "payload")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    graft.api.Multimodal.phashIndexBuild(mediaA, "doc_id", "payload", path)
+    val first = serve()
+    assert(first.contains((900001L, copyA.getLong(0), 0)))
+    assert(first.forall(_._2 % 10 == 1))
+    graft.api.Multimodal.phashIndexBuild(mediaB, "doc_id", "payload", path)
+    val second = serve()
+    assert(second.contains((900002L, copyB.getLong(0), 0)),
+      "the rebuilt index's bands were not served")
+    assert(second.forall(_._2 % 10 == 2),
+      "bands of the replaced build were served")
+    graft.PlanCache.drop(spark, path, "phash_bands")
+  }
 }
