@@ -45,19 +45,62 @@ object Bench {
   }
   private[graft] def calibrateWarmup(): Unit = { calibrate(20000000L); () }
 
-  def main(args: Array[String]): Unit = {
-    val load0 = loadavg1m()
-    val (steal0, jif0) = stealTotals()
-    calibrateWarmup()
-    val cal0 = calibrate()
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+  /** One run's in-artifact noise telemetry (round-16 VERDICT item 2):
+    * loadavg bookends, the cumulative steal/total jiffy deltas, and the
+    * fixed-work calibration triple (start/mid/end; a quiet-host
+    * constant that inflates 1:1 with hypervisor steal) — loadavg alone
+    * provably cannot adjudicate host quiet. Construct it first thing
+    * in a run (it takes the start readings), call [[mid]] halfway
+    * through the measured work and [[end]] once after it. */
+  private[graft] final class Noise {
+    private val load0 = loadavg1m()
+    private val (steal0, jif0) = stealTotals()
+    private val cal0 = { calibrateWarmup(); calibrate() }
+    private var calMid = -1.0
+
+    def mid(): Unit = calMid = calibrate()
+
+    /** The end readings, as the JSON fragment every bench artifact
+      * carries: `cal_sec`, `steal_jiffies_delta`, `cpu_jiffies_delta`
+      * (-1 when unreadable), `loadavg_start`, `loadavg_end`. */
+    def end(): String = {
+      val load1 = loadavg1m()
+      val cal1 = calibrate()
+      val (steal1, jif1) = stealTotals()
+      def delta(a: Long, b: Long) = if (a >= 0 && b >= 0) b - a else -1L
+      s""""cal_sec":[$cal0,$calMid,$cal1],""" +
+        s""""steal_jiffies_delta":${delta(steal0, steal1)},""" +
+        s""""cpu_jiffies_delta":${delta(jif0, jif1)},""" +
+        s""""loadavg_start":$load0,"loadavg_end":$load1"""
+    }
+  }
+
+  /** The measurement mains' session: `local[cpus]`, one shuffle
+    * partition per core, no UI, WARN logging, plus the caller's own
+    * `extra` confs. */
+  private[graft] def session(cpus: String,
+      extra: (String, String)*): SparkSession = {
+    val base = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
+    val spark = extra.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** `f`'s result and its wall seconds. */
+  private[graft] def time[A](f: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val r = f
+    (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val noise = new Noise
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = session(cpus)
     // Untimed warmup: JVM/JIT, whole-stage-codegen compiler, parquet
     // reader and shuffle machinery init are one-time JVM costs (~3-4 s)
     // that would otherwise be charged to whichever query happens to run
@@ -172,39 +215,27 @@ object Bench {
     def timeQ(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (String, Double) = {
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+      val (ok, sec) = time(
+        try { fn(spark, sfDir).count(); true }
+        catch { case _: Throwable => false })
+      name -> (if (ok) sec else -1.0)
     }
     val sortedQ = SparkEntry.queries.toSeq.sortBy(_._1)
     val (half1, half2) = sortedQ.splitAt(sortedQ.size / 2)
     val r1 = half1.map { case (n, f) => timeQ(n, f) }
-    val calMid = calibrate()
+    noise.mid()
     val r2 = half2.map { case (n, f) => timeQ(n, f) }
     val results = r1 ++ r2
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val failed = results.count(_._2 < 0)
     val total = results.map(_._2).filter(_ >= 0).sum
-    val load1 = loadavg1m()
-    val cal1 = calibrate()
-    val (steal1, jif1) = stealTotals()
-    // In-artifact noise telemetry (round-16 VERDICT item 2): the
-    // fixed-work calibration triple (start/mid/end; quiet-host
-    // constant, inflates 1:1 with hypervisor steal) and the
-    // cumulative steal-jiffy delta across the run. loadavg alone
-    // provably cannot adjudicate host quiet.
-    val noise = s""""cal_sec":[$cal0,$calMid,$cal1],""" +
-      s""""steal_jiffies_delta":${if (steal0 >= 0 && steal1 >= 0)
-        steal1 - steal0 else -1},""" +
-      s""""cpu_jiffies_delta":${if (jif0 >= 0 && jif1 >= 0)
-        jif1 - jif0 else -1}"""
+    val noiseFields = noise.end()
     // full line first, compact total-only line LAST: the driver tails
     // stdout, and the long per-query line was truncated in round 1
     // ("parsed": null) — the final line must stay short.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"prebuilt_indexes":$prebuilt,"prewarmed_memos":$prewarmedMemos,"prewarm_memos_sec":$prewarmSec,$noise,"loadavg_start":$load0,"loadavg_end":$load1,"sf":"$sfDir"}""")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":$failed,$noise,"loadavg_start":$load0,"loadavg_end":$load1,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"prebuilt_indexes":$prebuilt,"prewarmed_memos":$prewarmedMemos,"prewarm_memos_sec":$prewarmSec,$noiseFields,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":$failed,$noiseFields,"sf":"$sfDir"}""")
     PlanCache.clear()
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Index-BUILD benchmark (the offline half the query benches exclude):
@@ -26,20 +25,13 @@ object IndexBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val which = if (args.isEmpty) Set("exact", "descent") else args.toSet
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(cpus)
     val ev = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .repartition(cpus.toInt, col("vec_id"))
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
     val n = ev.count()
-    def time[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+    import Bench.time
     val base = sys.env.getOrElse("SPARK_GRAFT_IDX_BASE",
       java.nio.file.Files.createTempDirectory("graft_idxbench").toString)
     var fields = Seq(s""""n_vectors": $n""")

@@ -3,8 +3,14 @@ package graft
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-/** Path + atomicity discipline for SAVED serving indexes (the IVF /
-  * IVF-PQ ANN indexes and the MinHash signature index).
+/** Path + atomicity discipline for every SAVED artifact — 26 stamped
+  * families: the ANN indexes (IVF, attributed IVF, IVF-PQ, the NSW /
+  * NN-Descent / diversified / hierarchical graphs, k-center sets), the
+  * lexical, BM25, eval-gram, phash and MinHash/containment signature
+  * indexes, the snapshot tables behind the merge rows, the per-day
+  * DDSketch frames, the graph-edge artifacts and the incremental-CC
+  * base state. A family shared by several consumers is built by one
+  * `ensure<Family>` def next to its queries.
   *
   * Two problems a shared on-disk index must solve:
   *

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query WARM-ISOLATION benchmark — the adjudication artifact for
   * rounds where the driver's wall-clock bench is host-noise-bound
   * (see BASELINE.md's noise notes): each query runs twice in a fresh
@@ -111,10 +109,7 @@ object IsoBench {
     "dedup_before_pairing")
 
   def main(args: Array[String]): Unit = {
-    val load0 = Bench.loadavg1m()
-    val (steal0, jif0) = Bench.stealTotals()
-    Bench.calibrateWarmup()
-    val cal0 = Bench.calibrate()
+    val noise = new Bench.Noise
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val names = if (args.nonEmpty) args.toSeq else headline
@@ -133,44 +128,28 @@ object IsoBench {
     // the point.
     val clearBetween =
       sys.env.getOrElse("SPARK_GRAFT_ISO_CLEAR", "0") == "1"
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(cpus)
     spark.range(1000).selectExpr("sum(id)").collect()
     val mid = names.size / 2
-    var calMid = -1.0
     val warm = names.zipWithIndex.map { case (name, idx) =>
-      if (idx == mid) calMid = Bench.calibrate()
+      if (idx == mid) noise.mid()
       if (clearBetween) PlanCache.clear()
       var last = 0.0
       for (r <- 1 to runs) {
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sfDir).count()
-        last = (System.nanoTime() - t0) / 1e9
+        last = Bench.time(SparkEntry.queries(name)(spark, sfDir).count())._2
         println(f"$name run$r [local[$cpus]]: $last%.2f s")
       }
       name -> last
     }
-    // loadavg bookends + the fixed-work calibration triple + the
-    // cumulative steal delta make the artifact self-adjudicating: a
+    // the noise telemetry makes the artifact self-adjudicating: a
     // record captured under host load (visible OR hypervisor-hidden)
     // announces itself instead of silently overstating costs (the
     // round-8 ISOBENCH lesson; the round-16 loadavg-blindness lesson).
-    val load1 = Bench.loadavg1m()
-    val cal1 = Bench.calibrate()
-    val (steal1, jif1) = Bench.stealTotals()
     val json = warm.map { case (n, t) => f""""$n": $t%.3f""" }
       .mkString(
         s"""{"metric": "${if (runs == 1) "cold_iso_sec" else "warm_iso_sec"}", """ +
           s""""sf": "$sfDir", "cpus": $cpus, "runs": $runs, """ +
-          s""""cleared_between": $clearBetween, """ +
-          s""""loadavg_start": $load0, "loadavg_end": $load1, """ +
-          s""""cal_sec": [$cal0, $calMid, $cal1], """ +
-          s""""steal_jiffies_delta": ${if (steal0 >= 0 && steal1 >= 0)
-            steal1 - steal0 else -1}, """ +
-          s""""cpu_jiffies_delta": ${if (jif0 >= 0 && jif1 >= 0)
-            jif1 - jif0 else -1}, """ +
+          s""""cleared_between": $clearBetween, ${noise.end()}, """ +
           """"queries": {""",
         ", ", "}}")
     println(json)

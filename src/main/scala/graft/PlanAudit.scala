@@ -1,14 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: dump formatted plans for headline queries so scan
   * pruning / join strategy / codegen spans can be audited. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session("4")
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "filter_pred", "join_broadcast", "join_sortmerge", "join_multiway",
       "agg_pricing_summary", "sort_multi_key")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** HOT-LABEL skew probe (SURVEY §2.11 leave-behind (f)): measures the
@@ -24,15 +23,12 @@ object SkewProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val hotPct = sys.env.getOrElse("SPARK_GRAFT_HOT_PCT", "80").toInt
     val tau = sys.env.getOrElse("SPARK_GRAFT_TAU", "0.8").toDouble
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the 100 TB-regime posture: a corpus side is never
-      // broadcastable, so the probe must exercise the SHUFFLE join
-      // the decomposition exists for — at fixture scale the 10 MB
-      // corpus would otherwise be auto-broadcast and no skew exists
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the 100 TB-regime posture: a corpus side is never
+    // broadcastable, so the probe must exercise the SHUFFLE join
+    // the decomposition exists for — at fixture scale the 10 MB
+    // corpus would otherwise be auto-broadcast and no skew exists
+    val spark = Bench.session(cpus,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     graft.functions.VectorExpressions.register(spark)
     // hot corpus: hotPct% of rows collapse onto label 0 — the one
     // dominant language/source every real 100 TB corpus has
@@ -45,11 +41,7 @@ object SkewProbe {
       .localCheckpoint(true)
     val n = ev.count()
     val nHot = ev.filter(col("label") === 0).count()
-    def time[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+    import Bench.time
     // block-pair decomposition (the shipped plan)
     val (cBlocked, tBlocked) = time(
       graft.api.Similarity.labelPairs(ev, "vec_id", "v", "label", tau)

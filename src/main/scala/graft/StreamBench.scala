@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -35,16 +35,10 @@ object StreamBench {
     // twins are unaffected (no state store in their plans).
     val stateProvider =
       sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE", "hdfs")
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (stateProvider == "rocksdb")
-      builder.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val rocksdb = "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    val spark = Bench.session(cpus, Seq("spark.sql.session.timeZone" -> "UTC") ++
+      Option.when(stateProvider == "rocksdb")(rocksdb): _*)
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -95,45 +89,22 @@ object StreamBench {
     }
 
     // saved indexes: offline builds through IndexStore (stamped, so
-    // re-runs are pure reads)
-    val corpusDocs = docs.filter($"doc_id" % 10 =!= 3)
+    // re-runs are pure reads); the families the operators also serve
+    // come from the operators' own builds, so both serve one layout
     val sigPath = IndexStore.ensure(IndexStore.stampedPath(
         "sig_bands", sfDir, "documents.parquet")) { tmp =>
-      api.Dedup.signatureIndexBuild(corpusDocs, "doc_id", "text", tmp)
+      api.Dedup.signatureIndexBuild(docs.filter($"doc_id" % 10 =!= 3),
+        "doc_id", "text", tmp)
     }
-    val dcnPath = IndexStore.ensure(IndexStore.stampedPath(
-        "dcn_eval_g4", sfDir, "documents.parquet")) { tmp =>
-      api.Text.evalGramIndexBuild(docs.filter(
-          pmod(api.Sampling.portableHash($"doc_id", "eval:"), lit(50L))
-            === 0L), "doc_id", "text", tmp)
-    }
-    val phashPath = IndexStore.ensure(IndexStore.stampedPath(
-        "phash_b32", sfDir, "documents.parquet")) { tmp =>
-      api.Multimodal.phashIndexBuild(
-        corpusDocs.select($"doc_id", $"text".cast("binary").as("payload")),
-        "doc_id", "payload", tmp, bits = 32)
-    }
-    val ivfPath = IndexStore.ensure(IndexStore.stampedPath(
-        "ivf_c8", sfDir, "embeddings.parquet")) { tmp =>
-      api.Similarity.ivfBuild(
-        vecRows.toDF("vec_id", "v"), "vec_id", "v", tmp,
-        k = 8, rounds = 2)
-    }
+    val dcnPath = operators.TextQueries.ensureDcnEvalG4(spark, sfDir)
+    val phashPath = operators.MultimodalQueries.ensurePhashB32(spark, sfDir)
+    val ivfPath = operators.SimQueries.ensureIvfC8(spark, sfDir)
+    val ivflPath = operators.SimQueries.ensureIvflC8(spark, sfDir)
+    val kcPath = operators.SimQueries.ensureKcenterC4(spark, sfDir)
     val lvecRows = sources.Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"label",
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .as[(Long, Int, Seq[Double])].collect().toSeq
-    val ivflPath = IndexStore.ensure(IndexStore.stampedPath(
-        "ivfl_c8", sfDir, "embeddings.parquet")) { tmp =>
-      api.Similarity.ivfBuild(
-        lvecRows.toDF("vec_id", "label", "v"), "vec_id", "v", tmp,
-        k = 8, rounds = 2, attrs = Seq("label"))
-    }
-    val kcPath = IndexStore.ensure(IndexStore.stampedPath(
-        "kcenter_c4", sfDir, "embeddings.parquet")) { tmp =>
-      api.Similarity.kcenterIndexBuild(
-        vecRows.toDF("vec_id", "v"), "vec_id", "v", tmp, 4)
-    }
 
     val arrivalsDocs = docRows.filter(_._1 % 10 == 3)
     // stateful tier feed: time-ordered events (the watermark advances

@@ -324,7 +324,10 @@ object DedupQueries {
   val dedupClustersIncremental: GQuery = GQuery(
     "dedup_clusters_incremental", duckClustersSql) { (s, dir) =>
     val pairs = minhashPairsSpark(s, dir).select(col("doc1"), col("doc2"))
-    val baseOnly = (col("doc1") % 5 < 4) && (col("doc2") % 5 < 4)
+    // base = doc_id % 5 < 4, the rest is today's delta
+    val (splitMod, baseBelow) = (5, 4)
+    val baseOnly = (col("doc1") % splitMod < baseBelow) &&
+      (col("doc2") % splitMod < baseBelow)
     // yesterday's state is a SAVED artifact (r18 opt, guide §1.2/§2.4):
     // the base clustering is yesterday's run by construction, so the
     // timed daily apply must not re-contract the base pair graph — it
@@ -334,8 +337,12 @@ object DedupQueries {
     // prebuilt pass so a fresh corpus generation pays the build
     // offline). Previously BOTH the base CC and the merge CC ran in
     // the timed region.
+    // the family names the split and the MinHash shape (8 hashes,
+    // 4 bands × 2 rows, est ≥ 0.5) the base state was clustered with,
+    // so changing either restamps the artifact
     val path = graft.IndexStore.ensure(graft.IndexStore.stampedPath(
-        "dedup_base_cc", dir, "documents.parquet")) { tmp =>
+        s"dedup_base_cc_m${splitMod}lt${baseBelow}_h8b4r2j50", dir,
+        "documents.parquet")) { tmp =>
       // two-phase schedule — measured FASTER and TIGHTER than the
       // alternating one at worst-case dup density, BASELINE.md's
       // cleared-state 100× table

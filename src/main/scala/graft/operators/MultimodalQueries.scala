@@ -333,20 +333,27 @@ object MultimodalQueries {
        |  ON a.doc_id % 10 = 3 AND c.doc_id % 10 <> 3
        |WHERE bit_count(xor(a.simhash, c.simhash)) <= 3
        |ORDER BY arrival_id, corpus_id""".stripMargin) { (s, dir) =>
-    val media = Tables.documentsSpread(s, dir)
-      .select(col("doc_id"), col("text").cast("binary").as("payload"))
-    val path = graft.IndexStore.ensure(
-      graft.IndexStore.stampedPath("phash_b32", dir,
-        "documents.parquet")) { tmp =>
-      graft.api.Multimodal.phashIndexBuild(
-        media.filter(col("doc_id") % 10 =!= 3), "doc_id", "payload",
-        tmp, bits = 32)
-    }
     graft.streaming.MultimodalStreams.phashAgainstSavedIndex(
-        media.filter(col("doc_id") % 10 === 3), path, "doc_id",
-        "payload")
+        phashMedia(s, dir).filter(col("doc_id") % 10 === 3),
+        ensurePhashB32(s, dir), "doc_id", "payload")
       .orderBy(col("arrival_id"), col("corpus_id"))
   }
+
+  /** Documents as binary media: (doc_id, payload = text bytes). */
+  private def phashMedia(s: SparkSession, dir: String): DataFrame =
+    Tables.documentsSpread(s, dir)
+      .select(col("doc_id"), col("text").cast("binary").as("payload"))
+
+  /** phash_b32: the saved 32-bit banded phash index over the corpus
+    * slice (doc_id % 10 != 3) — multimodal_phash_ingest's and
+    * StreamBench's phash twin's one build. */
+  private[graft] def ensurePhashB32(s: SparkSession, dir: String): String =
+    graft.IndexStore.ensure(
+      graft.IndexStore.stampedPath("phash_b32", dir, "documents.parquet")) {
+      tmp => graft.api.Multimodal.phashIndexBuild(
+        phashMedia(s, dir).filter(col("doc_id") % 10 =!= 3), "doc_id",
+        "payload", tmp, bits = 32)
+    }
 
   /** CLUSTER-COMPOSITION profile — the SemDeDup-style QA readout over
     * the SAVED IVF index's cells joined back to the TEXT modality: per
@@ -373,15 +380,7 @@ object MultimodalQueries {
        |  round(CAST(c.n_docs AS DOUBLE) / t.ct, 6) AS cell_share
        |FROM cl c JOIN tot t USING (cid)
        |ORDER BY cid, lang""".stripMargin) { (s, dir) =>
-    // the exact same vector prep sim_topk_ivf builds from, so a fresh
-    // build here is bit-identical to the one the serving path ships
-    val ev = SimQueries.vecs(s, dir).select(col("vec_id"), col("v"))
-    val ivfPath = graft.IndexStore.ensure(
-      graft.IndexStore.stampedPath("ivf_c8", dir, "embeddings.parquet")) {
-      tmp => graft.api.Similarity.ivfBuild(ev, "vec_id", "v", tmp,
-        k = 8, rounds = 2)
-    }
-    val cells = s.read.parquet(s"$ivfPath/cells")
+    val cells = s.read.parquet(s"${SimQueries.ensureIvfC8(s, dir)}/cells")
       .select(col("cid"), col("vec_id"))
     val cl = cells
       .join(Tables.documents(s, dir)

@@ -242,11 +242,7 @@ object SimQueries {
        |FROM ranked WHERE rk <= 3
        |ORDER BY probe_id, rk""".stripMargin) { (s, dir) =>
     val ev = vecs(s, dir).select(col("vec_id"), col("v"))
-    val ivfPath = graft.IndexStore.ensure(
-      graft.IndexStore.stampedPath("ivf_c8", dir, "embeddings.parquet")) {
-      tmp => graft.api.Similarity.ivfBuild(ev, "vec_id", "v", tmp,
-        k = 8, rounds = 2)
-    }
+    val ivfPath = ensureIvfC8(s, dir)
     graft.api.Similarity.ivfTopK(ev.filter(col("vec_id") < 50),
       "vec_id", "v", ivfPath, k = 3, nProbe = 3)
       .orderBy(col("probe_id"), col("rk"))
@@ -524,11 +520,7 @@ object SimQueries {
        |FROM ranked WHERE rk <= 3
        |ORDER BY probe_id, rk""".stripMargin) { (s, dir) =>
     val ev = vecs(s, dir).select(col("vec_id"), col("v"))
-    val pqPath = graft.IndexStore.ensure(
-      graft.IndexStore.stampedPath("ivfpq_c8r8", dir, "embeddings.parquet")) {
-      tmp => graft.api.IvfPq.build(ev, "vec_id", "v", tmp,
-        k = 8, rounds = 2, m = 8, ksub = 64)
-    }
+    val pqPath = ensureIvfpqC8r8(s, dir)
     graft.api.IvfPq.topK(ev.filter(col("vec_id") < 50),
       "vec_id", "v", pqPath, k = 3, nProbe = 3)
       .orderBy(col("probe_id"), col("rk"))
@@ -625,11 +617,7 @@ object SimQueries {
     val probes = ev.filter(col("vec_id") < 50)
     val exact = graft.api.Similarity.cosineTopK(ev, probes, "vec_id", "v",
       k = 3).select(col("probe_id"), col("neighbor_id"))
-    val pqPath = graft.IndexStore.ensure(
-      graft.IndexStore.stampedPath("ivfpq_c8r8", dir, "embeddings.parquet")) {
-      tmp => graft.api.IvfPq.build(ev, "vec_id", "v", tmp,
-        k = 8, rounds = 2, m = 8, ksub = 64)
-    }
+    val pqPath = ensureIvfpqC8r8(s, dir)
     val ann = graft.api.IvfPq.topK(probes, "vec_id", "v",
       pqPath, k = 3, nProbe = 3)
       .select(col("probe_id"), col("neighbor_id"))
@@ -676,11 +664,7 @@ object SimQueries {
        |  >= 0.4
        |ORDER BY probe_id, neighbor_id""".stripMargin) { (s, dir) =>
     val ev = vecs(s, dir).select(col("vec_id"), col("v"))
-    val ivfPath = graft.IndexStore.ensure(
-      graft.IndexStore.stampedPath("ivf_c8", dir, "embeddings.parquet")) {
-      tmp => graft.api.Similarity.ivfBuild(ev, "vec_id", "v", tmp,
-        k = 8, rounds = 2)
-    }
+    val ivfPath = ensureIvfC8(s, dir)
     graft.api.Similarity.ivfRangeSearch(ev.filter(col("vec_id") < 20),
       "vec_id", "v", ivfPath, tau = 0.4, nProbe = 3)
       .orderBy(col("probe_id"), col("neighbor_id"))
@@ -796,15 +780,65 @@ object SimQueries {
         .orderBy(col("cid"), col("v1"), col("v2"))
   }
 
-  /** The shared ivf_c8 build-if-absent (one stamped artifact, many
-    * consumers: ANN top-k, range, semantic dedup, cell stats, the
-    * path probe). */
-  private def ensureIvfC8(s: SparkSession, dir: String): String =
+  /* The shared saved artifacts of these rows: each stamped family is
+   * spelled once, built from the same `vecs` / `documentsSpread` input
+   * its oracle rows certify, so the bytes published under a stamp never
+   * depend on which consumer (a query or a bench main) builds first. */
+
+  /** ivf_c8: ANN top-k, range, semantic dedup, cell stats, hybrid,
+    * recall and cluster-profile rows, and StreamBench's range twin. */
+  private[graft] def ensureIvfC8(s: SparkSession, dir: String): String =
     graft.IndexStore.ensure(
       graft.IndexStore.stampedPath("ivf_c8", dir, "embeddings.parquet")) {
       tmp => graft.api.Similarity.ivfBuild(
         vecs(s, dir).select(col("vec_id"), col("v")), "vec_id", "v",
         tmp, k = 8, rounds = 2)
+    }
+
+  /** ivfl_c8: the label-attributed IVF index (filtered top-k/recall
+    * and StreamBench's matched-range twin). */
+  private[graft] def ensureIvflC8(s: SparkSession, dir: String): String =
+    graft.IndexStore.ensure(
+      graft.IndexStore.stampedPath("ivfl_c8", dir, "embeddings.parquet")) {
+      tmp => graft.api.Similarity.ivfBuild(
+        vecs(s, dir).select(col("vec_id"), col("label"), col("v")),
+        "vec_id", "v", tmp, k = 8, rounds = 2, attrs = Seq("label"))
+    }
+
+  /** ivfpq_c8r8: the IVF-PQ index (top-k, recall, PQ error audit). */
+  private[graft] def ensureIvfpqC8r8(s: SparkSession, dir: String): String =
+    graft.IndexStore.ensure(
+      graft.IndexStore.stampedPath("ivfpq_c8r8", dir, "embeddings.parquet")) {
+      tmp => graft.api.IvfPq.build(
+        vecs(s, dir).select(col("vec_id"), col("v")), "vec_id", "v", tmp,
+        k = 8, rounds = 2, m = 8, ksub = 64)
+    }
+
+  /** nng_k10d8: the full-corpus NSW graph (top-k, recall, and the
+    * hierarchical walk's base layer). */
+  private[graft] def ensureNngK10d8(s: SparkSession, dir: String): String =
+    graft.IndexStore.ensure(
+      graft.IndexStore.stampedPath("nng_k10d8", dir, "embeddings.parquet")) {
+      tmp => graft.api.Similarity.nngBuild(
+        vecs(s, dir).select(col("vec_id"), col("v")), "vec_id", "v", tmp,
+        k = 10, nEntries = 8)
+    }
+
+  /** lex_postings: the saved posting index of both hybrid rows. */
+  private[graft] def ensureLexPostings(s: SparkSession, dir: String): String =
+    graft.IndexStore.ensure(
+      graft.IndexStore.stampedPath("lex_postings", dir, "documents.parquet")) {
+      tmp => graft.api.Similarity.lexIndexBuild(
+        Tables.documentsSpread(s, dir), "doc_id", "text", tmp)
+    }
+
+  /** kcenter_c4: the saved Gonzalez k = 4 center set
+    * (sample_kcenter_assign and StreamBench's assign twin). */
+  private[graft] def ensureKcenterC4(s: SparkSession, dir: String): String =
+    graft.IndexStore.ensure(
+      graft.IndexStore.stampedPath("kcenter_c4", dir, "embeddings.parquet")) {
+      tmp => graft.api.Similarity.kcenterIndexBuild(
+        vecs(s, dir).select(col("vec_id"), col("v")), "vec_id", "v", tmp, 4)
     }
 
   /** The semantic-dedup PATH CHOOSER's cell-density probe as an
@@ -1427,11 +1461,7 @@ object SimQueries {
   val simHybridIndexed: GQuery = GQuery(
     "sim_hybrid_indexed", duckHybridSql) { (s, dir) =>
     val docs = Tables.documentsSpread(s, dir)
-    val path = graft.IndexStore.ensure(
-      graft.IndexStore.stampedPath("lex_postings", dir,
-        "documents.parquet")) { tmp =>
-      graft.api.Similarity.lexIndexBuild(docs, "doc_id", "text", tmp)
-    }
+    val path = ensureLexPostings(s, dir)
     val lexScore = graft.api.Similarity.lexSharedTerms(
         docs.filter(col("doc_id") < 5), "doc_id", "text", path)
       .filter(col("doc_id") =!= col("probe_id"))
@@ -1485,20 +1515,12 @@ object SimQueries {
        |$duckLexCtes,
        |$duckFuseTail""".stripMargin) { (s, dir) =>
     val docs = Tables.documentsSpread(s, dir)
-    val lexPath = graft.IndexStore.ensure(
-      graft.IndexStore.stampedPath("lex_postings", dir,
-        "documents.parquet")) { tmp =>
-      graft.api.Similarity.lexIndexBuild(docs, "doc_id", "text", tmp)
-    }
+    val lexPath = ensureLexPostings(s, dir)
     val lexScore = graft.api.Similarity.lexSharedTerms(
         docs.filter(col("doc_id") < 5), "doc_id", "text", lexPath)
       .filter(col("doc_id") =!= col("probe_id"))
     val ev = vecs(s, dir).select(col("vec_id"), col("v"))
-    val ivfPath = graft.IndexStore.ensure(
-      graft.IndexStore.stampedPath("ivf_c8", dir, "embeddings.parquet")) {
-      tmp => graft.api.Similarity.ivfBuild(ev, "vec_id", "v", tmp,
-        k = 8, rounds = 2)
-    }
+    val ivfPath = ensureIvfC8(s, dir)
     val vec = graft.api.Similarity.ivfTopK(ev.filter(col("vec_id") < 5),
         "vec_id", "v", ivfPath, k = 10, nProbe = 3)
       .select(col("probe_id"), col("neighbor_id").as("doc_id"),
@@ -2107,11 +2129,7 @@ object SimQueries {
     val probes = ev.filter(col("vec_id") < 50)
     val exact = graft.api.Similarity.cosineTopK(ev, probes, "vec_id", "v",
       k = 3).select(col("probe_id"), col("neighbor_id"))
-    val ivfPath = graft.IndexStore.ensure(
-      graft.IndexStore.stampedPath("ivf_c8", dir, "embeddings.parquet")) {
-      tmp => graft.api.Similarity.ivfBuild(ev, "vec_id", "v", tmp,
-        k = 8, rounds = 2)
-    }
+    val ivfPath = ensureIvfC8(s, dir)
     val ann = graft.api.Similarity.ivfTopK(probes, "vec_id", "v",
       ivfPath, k = 3, nProbe = 3)
       .select(col("probe_id"), col("neighbor_id"))
@@ -2406,11 +2424,7 @@ object SimQueries {
     val ev = vecs(s, dir).select(col("vec_id"), col("v"))
     val probes = ev.filter(col("vec_id") < 50)
     val exact = recallExactFrame(s, dir)
-    val ivfPath = graft.IndexStore.ensure(
-      graft.IndexStore.stampedPath("ivf_c8", dir, "embeddings.parquet")) {
-      tmp => graft.api.Similarity.ivfBuild(ev, "vec_id", "v", tmp,
-        k = 8, rounds = 2)
-    }
+    val ivfPath = ensureIvfC8(s, dir)
     val ann = (1 to 4).map { np =>
       graft.api.Similarity.ivfTopK(probes, "vec_id", "v", ivfPath,
           k = 3, nProbe = np)
@@ -2472,11 +2486,7 @@ object SimQueries {
        |GROUP BY label
        |ORDER BY label""".stripMargin) { (s, dir) =>
     val ev = vecs(s, dir).select(col("vec_id"), col("v"))
-    val pqPath = graft.IndexStore.ensure(
-      graft.IndexStore.stampedPath("ivfpq_c8r8", dir, "embeddings.parquet")) {
-      tmp => graft.api.IvfPq.build(ev, "vec_id", "v", tmp,
-        k = 8, rounds = 2, m = 8, ksub = 64)
-    }
+    val pqPath = ensureIvfpqC8r8(s, dir)
     val cells = s.read.parquet(s"$pqPath/cells")
       .select(col("vec_id"), col("v"), col("codes"))
     val cb = s.read.parquet(s"$pqPath/codebooks")
@@ -3009,12 +3019,7 @@ object SimQueries {
          |WHERE rk <= $k
          |ORDER BY probe_id, rk""".stripMargin) { (s, dir) =>
       val ev = vecs(s, dir).select(col("vec_id"), col("v"))
-      val nngPath = graft.IndexStore.ensure(
-        graft.IndexStore.stampedPath("nng_k10d8", dir,
-          "embeddings.parquet")) {
-        tmp => graft.api.Similarity.nngBuild(ev, "vec_id", "v", tmp,
-          k = kNeighbors, nEntries = nEntries)
-      }
+      val nngPath = ensureNngK10d8(s, dir)
       graft.api.Similarity.nngTopK(ev.filter(col("vec_id") < 50),
         "vec_id", "v", nngPath, k = k, beam = beam, rounds = rounds)
         .orderBy(col("probe_id"), col("rk"))
@@ -3072,12 +3077,7 @@ object SimQueries {
       val probes = ev.filter(col("vec_id") < 50)
       val exact = graft.api.Similarity.cosineTopK(ev, probes, "vec_id",
         "v", k = 3).select(col("probe_id"), col("neighbor_id"))
-      val nngPath = graft.IndexStore.ensure(
-        graft.IndexStore.stampedPath("nng_k10d8", dir,
-          "embeddings.parquet")) {
-        tmp => graft.api.Similarity.nngBuild(ev, "vec_id", "v", tmp,
-          k = kNeighbors, nEntries = nEntries)
-      }
+      val nngPath = ensureNngK10d8(s, dir)
       val ann = graft.api.Similarity.nngTopK(probes, "vec_id", "v",
         nngPath, k = 3, beam = beam, rounds = rounds)
         .select(col("probe_id"), col("neighbor_id"))
@@ -3201,12 +3201,7 @@ object SimQueries {
       val probes = ev.filter(col("vec_id") < 50)
       val exact = graft.api.Similarity.cosineTopK(ev, probes, "vec_id",
         "v", k = 3).select(col("probe_id"), col("neighbor_id"))
-      val nngPath = graft.IndexStore.ensure(
-        graft.IndexStore.stampedPath("nng_k10d8", dir,
-          "embeddings.parquet")) {
-        tmp => graft.api.Similarity.nngBuild(ev, "vec_id", "v", tmp,
-          k = kNeighbors, nEntries = 8)
-      }
+      val nngPath = ensureNngK10d8(s, dir)
       val hierPath = graft.IndexStore.ensure(
         graft.IndexStore.stampedPath("nng_hier_c256k4", dir,
           "embeddings.parquet")) {
@@ -3474,12 +3469,7 @@ object SimQueries {
        |FROM ranked WHERE rk <= 3
        |ORDER BY probe_id, rk""".stripMargin) { (s, dir) =>
     val ev = vecs(s, dir)
-    val ivflPath = graft.IndexStore.ensure(
-      graft.IndexStore.stampedPath("ivfl_c8", dir, "embeddings.parquet")) {
-      tmp => graft.api.Similarity.ivfBuild(
-        ev.select(col("vec_id"), col("label"), col("v")),
-        "vec_id", "v", tmp, k = 8, rounds = 2, attrs = Seq("label"))
-    }
+    val ivflPath = ensureIvflC8(s, dir)
     graft.api.Similarity.ivfTopKMatching(
         ev.filter(col("vec_id") < 50)
           .select(col("vec_id"), col("label"), col("v")),
@@ -3559,12 +3549,7 @@ object SimQueries {
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 3)
       .select(col("probe_id"), col("neighbor_id"))
-    val ivflPath = graft.IndexStore.ensure(
-      graft.IndexStore.stampedPath("ivfl_c8", dir, "embeddings.parquet")) {
-      tmp => graft.api.Similarity.ivfBuild(
-        ev.select(col("vec_id"), col("label"), col("v")),
-        "vec_id", "v", tmp, k = 8, rounds = 2, attrs = Seq("label"))
-    }
+    val ivflPath = ensureIvflC8(s, dir)
     val ann = graft.api.Similarity.ivfTopKMatching(
         probes.select(col("vec_id"), col("label"), col("v")),
         "vec_id", "v", ivflPath, k = 3, nProbe = 3,
@@ -3804,12 +3789,7 @@ object SimQueries {
          |FROM asn GROUP BY rank, cid
          |ORDER BY rank""".stripMargin) { (s, dir) =>
       val ev = vecs(s, dir).select(col("vec_id"), col("v"))
-      val path = graft.IndexStore.ensure(
-        graft.IndexStore.stampedPath("kcenter_c4", dir,
-          "embeddings.parquet")) { tmp =>
-        graft.api.Similarity.kcenterIndexBuild(ev, "vec_id", "v",
-          tmp, k)
-      }
+      val path = ensureKcenterC4(s, dir)
       graft.streaming.SampleStreams.assignAgainstSavedCenters(
           ev, path, "vec_id", "v")
         .groupBy(col("rank"), col("cid"))

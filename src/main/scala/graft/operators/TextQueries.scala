@@ -1173,15 +1173,18 @@ object TextQueries {
        |FROM pairs GROUP BY train_id, eval_id
        |ORDER BY train_id, eval_id""".stripMargin
 
+  /** The eval suite: the 1-in-50 portable-hash slice of documents. */
+  private val isEvalDoc =
+    pmod(graft.api.Sampling.portableHash(col("doc_id"), "eval:"),
+      lit(50L)) === lit(0L)
+
   val textDecontaminate: GQuery = GQuery(
     "text_decontaminate", duckDecontaminateSql) { (s, dir) =>
     val g = graft.api.Text.ngrams(
       Tables.documentsSpread(s, dir), "doc_id", "text", n = 4)
-    val isEval = pmod(graft.api.Sampling.portableHash(col("doc_id"), "eval:"),
-      lit(50L)) === lit(0L)
-    val evalGrams = g.filter(isEval)
+    val evalGrams = g.filter(isEvalDoc)
       .select(col("doc_id").as("eval_id"), col("ngram")).distinct()
-    g.filter(!isEval)
+    g.filter(!isEvalDoc)
       .select(col("doc_id").as("train_id"), col("ngram")).distinct()
       .join(evalGrams, Seq("ngram"))
       .groupBy(col("train_id"), col("eval_id"))
@@ -1207,19 +1210,22 @@ object TextQueries {
     * (stateless, Append-safe) and batch plans equal. */
   val textDecontaminateIndexed: GQuery = GQuery(
     "text_decontaminate_indexed", duckDecontaminateSql) { (s, dir) =>
-    val docs = Tables.documentsSpread(s, dir)
-    val isEval = pmod(graft.api.Sampling.portableHash(col("doc_id"), "eval:"),
-      lit(50L)) === lit(0L)
-    val path = graft.IndexStore.ensure(
-      graft.IndexStore.stampedPath("dcn_eval_g4", dir,
-        "documents.parquet")) { tmp =>
-      graft.api.Text.evalGramIndexBuild(docs.filter(isEval),
-        "doc_id", "text", tmp)
-    }
     graft.streaming.TextStreams.decontaminateAgainstSavedIndex(
-      docs.filter(!isEval), path, "doc_id", "text")
+      Tables.documentsSpread(s, dir).filter(!isEvalDoc),
+      ensureDcnEvalG4(s, dir), "doc_id", "text")
       .orderBy(col("train_id"), col("eval_id"))
   }
+
+  /** dcn_eval_g4: the saved eval-gram index over the eval suite —
+    * text_decontaminate_indexed's and StreamBench's decontamination
+    * twin's one build. */
+  private[graft] def ensureDcnEvalG4(s: SparkSession, dir: String): String =
+    graft.IndexStore.ensure(
+      graft.IndexStore.stampedPath("dcn_eval_g4", dir, "documents.parquet")) {
+      tmp => graft.api.Text.evalGramIndexBuild(
+        Tables.documentsSpread(s, dir).filter(isEvalDoc), "doc_id", "text",
+        tmp)
+    }
 
   /** ZIPF-fit corpus QA — the rank-frequency log-log slope per
     * language over the top-100 terms: natural language sits near −1;

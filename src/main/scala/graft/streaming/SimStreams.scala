@@ -51,13 +51,23 @@ object SimStreams {
     * a session that starts/stops many streams over one index pins ONE
     * cached copy, not one per call, and `PlanCache.evict(session)` /
     * `clear()` is the release path the harness mains already use
-    * (round-14 ADVICE). */
+    * (round-14 ADVICE). The centers ride a memo too: a running query
+    * keeps the file listing of every uncached static read, so an
+    * [[graft.api.Similarity.ivfBuild]] overwrite at `path` would fail
+    * its next micro-batch on deleted center files, while a cached read
+    * is re-listed and refilled by the write's path recache (spec-pinned
+    * in ServingMemoFreshnessSpec, with the cells after an append). */
   def rangeMatchingAgainstSavedIvfIndex(stream: DataFrame, id: String,
       vec: String, path: String, tau: Double, nProbe: Int,
       matchCols: Seq[String], cacheStatic: Boolean = true): DataFrame = {
     val spark = stream.sparkSession
     graft.functions.VectorExpressions.register(spark)
-    val centers = spark.read.parquet(s"$path/centers")
+    val memoStatic = stream.isStreaming && cacheStatic
+    val centersRaw = spark.read.parquet(s"$path/centers")
+    val centers =
+      if (memoStatic)
+        graft.PlanCache.memo(spark, path, "stream_ivf_centers")(centersRaw)
+      else centersRaw
     // per-row prep: double vector + norm (the Similarity.prep
     // projection, inlined because prep is batch-private)
     val p = stream.select(col(id).as("vec_id") +:
@@ -79,7 +89,7 @@ object SimStreams {
         col("v").as("vb"), col("nrm").as("nb")) ++
         matchCols.map(col): _*)
     val cells =
-      if (stream.isStreaming && cacheStatic)
+      if (memoStatic)
         graft.PlanCache.memo(spark, path,
           "stream_ivf_cells_" + matchCols.mkString(","))(cellsRaw)
       else cellsRaw

@@ -27,4 +27,26 @@ class BenchNoiseSpec extends org.scalatest.funsuite.AnyFunSuite {
     val (s1, j1) = Bench.stealTotals()
     assert(j1 >= j0 && s1 >= s0, "cumulative counters are monotone")
   }
+
+  test("shared noise fragment: calibration triple, integer jiffy deltas, " +
+      "loadavg bookends, in the order Bench's driver lines carry them") {
+    val noise = new Bench.Noise
+    noise.mid()
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(s"{${noise.end()}}")
+    val keys = Seq.newBuilder[String]
+    json.fieldNames().forEachRemaining(k => keys += k)
+    assert(keys.result() == Seq("cal_sec", "steal_jiffies_delta",
+      "cpu_jiffies_delta", "loadavg_start", "loadavg_end"))
+    val cal = json.get("cal_sec")
+    assert(cal.isArray && cal.size == 3)
+    (0 until 3).foreach { i =>
+      assert(cal.get(i).isDouble && cal.get(i).asDouble > 0,
+        s"cal_sec($i) must be a measured time, got ${cal.get(i)}")
+    }
+    for (k <- Seq("steal_jiffies_delta", "cpu_jiffies_delta"))
+      assert(json.get(k).isIntegralNumber && json.get(k).asLong >= 0, k)
+    for (k <- Seq("loadavg_start", "loadavg_end"))
+      assert(json.get(k).isDouble, k)
+  }
 }

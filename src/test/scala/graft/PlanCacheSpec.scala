@@ -12,7 +12,6 @@ import graft.sources.Tables
   * cannot accumulate pinned sessions.
   */
 class PlanCacheSpec extends SparkTestBase {
-  initQuiet()
 
   test("racing memo() calls build and persist exactly once") {
     PlanCache.clear()

@@ -16,7 +16,6 @@ import org.apache.spark.sql.types._
   * allowed to EMIT -0.0: normalize with `+ 0.0` or emit exact
   * integers instead. */
 class QuerySmokeSpec extends SparkTestBase {
-  initQuiet()
 
   private def negZeros(v: Any, dt: DataType, col: String): Seq[String] =
     (v, dt) match {

@@ -3,17 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One UTC local[4] session per suite, mirroring the driver harness
-  * (Verify.scala / Bench.scala config). */
+/** One UTC local[4] session per suite, built by the mains' shared
+  * [[Bench.session]] with Verify's config. */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    Bench.session("4", "spark.sql.session.timeZone" -> "UTC")
 
   val sfDir = "/root/testdata/sf0.001"
-
-  def initQuiet(): Unit = spark.sparkContext.setLogLevel("WARN")
 }

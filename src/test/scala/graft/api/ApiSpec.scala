@@ -11,7 +11,6 @@ import graft.sources.Tables
   * queries produce — the contract queries are thin bindings of the
   * API, so this pins the binding. */
 class ApiSpec extends SparkTestBase {
-  initQuiet()
 
   // fixture docs under USER column names
   private def myDocs = Tables.documents(spark, sfDir)

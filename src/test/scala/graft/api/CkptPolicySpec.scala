@@ -10,7 +10,6 @@ import graft.{Ckpt, SparkTestBase}
   * iterative kernel, and the reliable mode must actually write under
   * the configured directory (that's the fault-tolerance it buys). */
 class CkptPolicySpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   // a 2-component graph with a chain long enough to force several

@@ -13,7 +13,6 @@ import graft.SparkTestBase
   * and labels must equal a union-find oracle on arbitrary graphs.
   */
 class ConnectedComponentsSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   /** in-test union-find oracle */

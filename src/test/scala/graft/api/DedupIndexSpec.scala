@@ -14,7 +14,6 @@ import graft.sources.Tables
   * PLANNING time, and appended documents are findable immediately.
   */
 class DedupIndexSpec extends SparkTestBase {
-  initQuiet()
 
   private lazy val docs = Tables.documents(spark, sfDir)
     .select(col("doc_id"), col("text"))

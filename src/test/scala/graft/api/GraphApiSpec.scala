@@ -8,7 +8,6 @@ import graft.SparkTestBase
   * PageRank conservation, checkpoint-bounded plans, and the
   * degree-ordered orientation's hot-node bound. */
 class GraphApiSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   test("pageRank conserves total rank on a graph WITH dangling nodes") {

@@ -13,7 +13,6 @@ import graft.sources.Tables
   * at planning time, not a post-scan row filter.
   */
 class IvfIndexSpec extends SparkTestBase {
-  initQuiet()
 
   private lazy val ev = {
     graft.functions.VectorExpressions.register(spark)

@@ -11,7 +11,6 @@ import graft.sources.Tables
   * brute force, and the compression accounting that makes PQ the
   * 100 TB in-memory search structure. */
 class IvfPqSpec extends SparkTestBase {
-  initQuiet()
 
   private val M = 8
   private val KSUB = 64

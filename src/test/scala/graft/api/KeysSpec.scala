@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
   * 8-digit doc_id field silently corrupt their lexicographic order
   * when a value outruns the padded width — must fail fast instead). */
 class KeysSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   test("in-range values pass through unchanged") {

@@ -14,7 +14,6 @@ import graft.sources.Tables
   * sim_lex_ingest's oracle relies on).
   */
 class LexIndexSpec extends SparkTestBase {
-  initQuiet()
 
   private lazy val docs = Tables.documents(spark, sfDir)
     .select(col("doc_id"), col("text"))

@@ -12,7 +12,6 @@ import org.apache.spark.sql.functions._
   * makes the 200k-vector (100×) build fit the 24g default heap
   * instead of needing 64g. */
 class NngChunkSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   test("chunked build (maxJoinRows tiny) == unchunked build, edge for edge") {

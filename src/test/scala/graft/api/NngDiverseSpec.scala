@@ -18,7 +18,6 @@ import org.apache.spark.sql.functions._
   * point, so clone-pair cosines are exactly 1.0 at the rounded-6
   * grid, the worst case). */
 class NngDiverseSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   private lazy val cloneCorpus = {

@@ -12,7 +12,6 @@ import graft.SparkTestBase
   * greedy trajectory (vs a driver-side reference implementation).
   */
 class PackMmrSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   private def round6(x: Double): Double =

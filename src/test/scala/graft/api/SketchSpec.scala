@@ -19,7 +19,6 @@ import graft.sources.Tables
   *    are within α of every value in their bucket).
   */
 class SketchSpec extends SparkTestBase {
-  initQuiet()
 
   private val alpha = 0.02
   private lazy val ev = Tables.events(spark, sfDir)

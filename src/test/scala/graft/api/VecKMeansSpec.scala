@@ -23,7 +23,6 @@ import graft.sources.Tables
   * training must stay at 1 + 2·rounds Spark jobs.
   */
 class VecKMeansSpec extends SparkTestBase with Eventually {
-  initQuiet()
   import spark.implicits._
 
   private lazy val embeddings = {

@@ -6,7 +6,6 @@ import graft.SparkTestBase
 
 /** Unit coverage for the custom expressions and the UDAF demo. */
 class FunctionsSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   test("vec_dot / vec_norm match hand-computed values") {

@@ -10,7 +10,6 @@ import graft.SparkTestBase
   * heavy-hitters kernel vs the full groupBy on a skewed corpus).
   */
 class MisraGriesSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   private val k = 10

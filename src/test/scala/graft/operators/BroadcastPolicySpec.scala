@@ -24,7 +24,6 @@ import graft.{PlanCache, Registry, SparkTestBase}
   * hide from the audit.
   */
 class BroadcastPolicySpec extends SparkTestBase {
-  initQuiet()
 
   private def hintedSides(df: DataFrame): Seq[LogicalPlan] =
     df.queryExecution.analyzed.collect {

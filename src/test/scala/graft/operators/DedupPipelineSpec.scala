@@ -13,7 +13,6 @@ import graft.{PlanCache, SparkEntry, SparkTestBase}
   * make any direct pair enumeration output-quadratic.
   */
 class DedupPipelineSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   private def q(name: String, dir: String): DataFrame =

@@ -24,7 +24,6 @@ import graft.{SparkEntry, SparkTestBase}
   *    input).
   */
 class DedupRouterSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   private def q(name: String, dir: String): DataFrame =

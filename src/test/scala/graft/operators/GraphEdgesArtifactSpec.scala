@@ -14,7 +14,6 @@ import graft.{IndexStore, SparkTestBase}
   * half-built dir can never serve), and (c) a second serve is a pure
   * read (no rebuild — the stamp is stable while the fixture is). */
 class GraphEdgesArtifactSpec extends SparkTestBase {
-  initQuiet()
 
   private def edgeSet(df: DataFrame): Set[(Any, Any)] =
     df.select(col("src"), col("dst")).collect()

@@ -8,7 +8,6 @@ import graft.SparkTestBase
   * a pruned scan into a full scan or a co-located join into a shuffle.
   */
 class LayoutAnalyticsSpec extends SparkTestBase {
-  initQuiet()
 
   test("sink_partitioned_prune resolves the priority predicate as a PartitionFilter") {
     val plan = LayoutQueries.sinkPartitionedPrune.fn(spark, sfDir)

@@ -9,7 +9,6 @@ import graft.sources.Tables
   * no-oracle (sketches / approximate indexes), plus algebraic
   * invariants of the dedup family (SURVEY.md §5.2). */
 class OperatorPropertySpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   test("approx_count_distinct is within 10% of exact per event type") {

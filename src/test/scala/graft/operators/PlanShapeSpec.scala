@@ -11,7 +11,6 @@ import graft.{PlanCache, Registry, SparkTestBase}
   * is exactly the O(n²)-on-one-task shape round 1 was graded down
   * for. */
 class PlanShapeSpec extends SparkTestBase {
-  initQuiet()
 
   private val intendedNestedLoop = Set(
     "join_cross",       // intended cartesian (5×5×5 dims)

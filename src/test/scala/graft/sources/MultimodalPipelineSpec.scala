@@ -8,7 +8,6 @@ import graft.SparkTestBase
   * schema, batched mapPartitions decode, feature shape, partitioning
   * behavior. */
 class MultimodalPipelineSpec extends SparkTestBase {
-  initQuiet()
   import MultimodalPipeline._
 
   test("synthetic media table matches the declared schema") {

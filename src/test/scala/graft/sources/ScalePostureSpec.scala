@@ -13,7 +13,6 @@ import graft.SparkTestBase
   * partition pruning, and skew-salting that preserves results.
   */
 class ScalePostureSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   private def tmp(prefix: String): String =

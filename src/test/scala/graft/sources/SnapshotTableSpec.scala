@@ -17,7 +17,6 @@ import graft.SparkTestBase
   * its data intact). Plus the time-travel roundtrip merge_time_travel
   * rides on. */
 class SnapshotTableSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   private def freshDir(): String =

@@ -10,7 +10,6 @@ import graft.sources.Tables
   * a drained feed, its report must equal the dq_freshness contract
   * query, and per-type state must be monotone across micro-batches. */
 class AuditStreamsSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   private lazy val fixture = Tables.events(spark, sfDir)

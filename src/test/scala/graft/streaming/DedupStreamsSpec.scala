@@ -13,7 +13,6 @@ case class Doc(doc_id: Long, text: String)
   * band join must flag arriving near-duplicates of the indexed corpus
   * exactly as a batch run would. */
 class DedupStreamsSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   // corpus = docs 0..399 (indexed in batch); arrivals = docs 400+

@@ -16,7 +16,6 @@ case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
   * produce the same result when run as a Structured Streaming query
   * over the same finite input, and watermarks must drop late data. */
 class EventStreamsSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   private def t(sec: Long): Timestamp = new Timestamp(sec * 1000L)

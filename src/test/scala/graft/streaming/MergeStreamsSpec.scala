@@ -16,7 +16,6 @@ case class Chg(k: Long, seg: String, bal: java.math.BigDecimal,
   * (one complete state on disk at every crash point), and tombstone
   * compaction under a retention watermark. */
 class MergeStreamsSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   private def bd(v: String) = new java.math.BigDecimal(v)

@@ -11,7 +11,6 @@ import graft.sources.Tables
   * the saved banded index must equal the batch probe and the direct
   * pair computation. */
 class MultimodalStreamsSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   private lazy val media = Tables.documents(spark, sfDir)

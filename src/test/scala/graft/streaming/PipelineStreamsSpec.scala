@@ -14,7 +14,6 @@ case class PDoc(doc_id: Long, text: String, source: String)
   * equal to the same function on a batch frame, with planted
   * drop/keep cases for every stage. */
 class PipelineStreamsSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   private lazy val all = Tables.documents(spark, sfDir)

@@ -11,7 +11,6 @@ case class SEv(event_id: Long, event_type: String)
 /** Streaming twins of the deterministic samplers: streaming ≡ batch
   * on the same finite input, across multiple batches. */
 class SampleStreamsSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   private lazy val fixture: Seq[SEv] = Tables.events(spark, sfDir)

@@ -13,7 +13,6 @@ case class LVec(vec_id: Long, label: Int, embedding: Seq[Float])
   * the batch serving path (graft.api.Similarity.ivfRangeSearch) on
   * the same arrivals — the continuous-RAG serving twin. */
 class SimStreamsSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   test("streaming IVF range probe == batch ivfRangeSearch, incl. a planted self-neighbor") {

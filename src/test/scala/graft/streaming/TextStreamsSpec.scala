@@ -10,7 +10,6 @@ import graft.sources.Tables
   * exactly, run on a stream statelessly, and compose with the
   * ingestion dedup into one streaming pipeline. */
 class TextStreamsSpec extends SparkTestBase {
-  initQuiet()
   import spark.implicits._
 
   private lazy val docs = Tables.documents(spark, sfDir)
