@@ -24,6 +24,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * `clear()` unpersists everything — harness mains call it before
   * `spark.stop()`, and specs use it to assert no leaked blocks.
+  *
+  * Freshness has one rule, and no writer takes part in it: any
+  * `DataFrameWriter` insert (overwrite or append) whose output path is
+  * a memo's read path, or a directory above it, re-lists the memo's
+  * files and refills its blocks, through the insert command's
+  * `CacheManager.recacheByPath`. So a saved artifact served from a
+  * memo of its path is never stale after a same-session rebuild or
+  * append, and a running stream holding the memo in its plan serves
+  * the new files on its next micro-batch (an uncached read in a
+  * running plan keeps its first file listing: deleted files fail the
+  * batch, appended ones are never seen). `IndexStore.ensure`'s rename
+  * publish is not an insert and refreshes nothing, which is why
+  * stamped paths change instead of being rewritten in place.
   */
 object PlanCache {
   private val cache = TrieMap.empty[(SparkSession, String, String), DataFrame]
@@ -95,12 +108,6 @@ object PlanCache {
     }
     scalarCache.keys.foreach { k => if (p(k._1)) scalarCache.remove(k) }
   }
-
-  /** Drop ONE memoized frame and unpersist its blocks — for callers
-    * that mutate the artifact a memo was read from (e.g. an NSW graph
-    * append invalidating its serving memo). No-op when absent. */
-  def drop(s: SparkSession, dir: String, key: String): Unit =
-    cache.remove((s, dir, key)).foreach(_.unpersist(blocking = false))
 
   /** Number of live memoized frames (for leak assertions in specs). */
   def size: Int = cache.size

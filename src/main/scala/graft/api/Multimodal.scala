@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.sources.MultimodalPipeline
@@ -151,7 +151,6 @@ object Multimodal {
     bandedSim(aggPhashSigs(media, id, payload, bits), id, bits / 4)
       .write.mode("overwrite").partitionBy("band", "bk")
       .parquet(s"$path/bands")
-    dropBandMemos(spark, path)
   }
 
   /** Append new payloads' signatures to a saved [[phashIndexBuild]]
@@ -165,14 +164,6 @@ object Multimodal {
     bandedSim(aggPhashSigs(newMedia, id, payload, bits), id, bits / 4)
       .write.mode("append").partitionBy("band", "bk")
       .parquet(s"$path/bands")
-    dropBandMemos(spark, path)
-  }
-
-  /** A session serving `path` from the bands memos must never see the
-    * bands a rebuild or append replaced (the nngInsert discipline). */
-  private def dropBandMemos(spark: SparkSession, path: String): Unit = {
-    graft.PlanCache.drop(spark, path, "phash_bands")
-    graft.PlanCache.drop(spark, path, "stream_phash_bands")
   }
 
   /** (id, simhash) → one row per `bw`-bit band: (band, bk, id,

@@ -859,17 +859,6 @@ object Similarity {
     // bounded aggregate; re-reading beats re-deriving the union plan)
     nngEntriesDegree(corpus.sparkSession, path, nEntries)
       .write.mode("overwrite").parquet(s"$path/entries")
-    dropServingMemos(corpus.sparkSession, path)
-  }
-
-  /** Invalidate the [[nngTopK]] serving memos after any writer
-    * overwrites or grows `$path/adj`/`$path/nodes` — a same-session
-    * rebuild at a served path must never serve the stale pre-rebuild
-    * graph (round-17 ADVICE; [[nngInsert]] has always done this). */
-  private def dropServingMemos(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    graft.PlanCache.drop(spark, path, "nng_adj")
-    graft.PlanCache.drop(spark, path, "nng_nodes")
   }
 
   /** DIVERSIFIED k-NN graph build — the clone-robust variant of
@@ -963,7 +952,6 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$path/nodes")
     nngEntriesDegree(corpus.sparkSession, path, nEntries)
       .write.mode("overwrite").parquet(s"$path/entries")
-    dropServingMemos(corpus.sparkSession, path)
   }
 
   /** GREEDY BEAM SEARCH over a saved k-NN graph — the graph-traversal
@@ -999,8 +987,9 @@ object Similarity {
     // exchange reuse is possible): memoize both saved-index frames
     // persisted PRE-PARTITIONED on their join keys, so every round's
     // index side is a cached, exchange-free scan (guide §2.4; r17
-    // opt). Keyed by the index path; [[nngInsert]] drops both keys
-    // after appending so a grown graph is never served stale.
+    // opt). Keyed by the index path: every rebuild and [[nngInsert]]
+    // writes adj/nodes in place, and that write's path recache keeps
+    // both memos fresh (see [[graft.PlanCache]]).
     val nPart = spark.sessionState.conf.numShufflePartitions
     val adj = graft.PlanCache.memo(spark, path, "nng_adj") {
       spark.read.parquet(s"$path/adj").repartition(nPart, col("src"))
@@ -1262,7 +1251,6 @@ object Similarity {
     // degree-seeded entries (the nngBuild adoption — see its scaladoc)
     nngEntriesDegree(corpus.sparkSession, path, nEntries)
       .write.mode("overwrite").parquet(s"$path/entries")
-    dropServingMemos(corpus.sparkSession, path)
     counts.toSeq
   }
 
@@ -1288,10 +1276,6 @@ object Similarity {
       col("neighbor_id").as("dst"))
     d.unionByName(d.select(col("dst").as("src"), col("src").as("dst")))
       .write.mode("append").parquet(s"$path/adj")
-    // the serving memos ([[nngTopK]]) predate the append — drop them
-    // so the next walk reads the grown graph, not a stale cache
-    graft.PlanCache.drop(arrivals.sparkSession, path, "nng_adj")
-    graft.PlanCache.drop(arrivals.sparkSession, path, "nng_nodes")
     links
   }
 }

@@ -115,21 +115,6 @@ object DedupStreams {
       id, Seq("b", "k1", "k2"), minEst)
   }
 
-  /** Near-duplicate candidates of a document stream against the SAVED
-    * signature index at `path` (graft.api.Dedup.signatureIndexBuild):
-    * (<id>, corpus_id, est_jaccard ≥ minEst).
-    *
-    * The index is read as-is — already banded, already bucketed — so
-    * a fresh serving process never re-signs the corpus. For a BATCH
-    * arrival frame, the arrivals' band-bucket set (bounded by the
-    * index's nBuckets) is realized on the driver as a literal
-    * `bkt IN (...)` predicate, which Catalyst turns into
-    * PartitionFilters: only the touched bucket directories are ever
-    * read (the same pruning move as [[graft.api.Similarity.ivfTopK]]).
-    * A STREAMING frame cannot be collected, so the bucket is a join
-    * key instead and the stream-static join re-reads the (pruned-by-
-    * nothing) index per micro-batch — still correct, and the engine
-    * sizes the join from the index's actual size. */
   /** Eval-CONTAMINATION probe of a stream of arriving eval documents
     * against a SAVED training-corpus containment index
     * (graft.api.Dedup.containmentIndexBuild): (eval_id, train_id,
@@ -157,7 +142,10 @@ object DedupStreams {
     *    early-exit `sorted_intersect_count` call, no aggregate.
     *
     * A BATCH arrival frame additionally prunes the postings scan to
-    * its prefix shingles' buckets via a literal partition filter. */
+    * its prefix shingles' buckets via a literal partition filter. A
+    * stream reads postings and docs through [[graft.PlanCache]] memos
+    * of `path` instead, so a same-session build or append at `path`
+    * reaches the running query (the PlanCache rule). */
   def containmentAgainstSavedIndex(stream: DataFrame, path: String,
       id: String, text: String, num: Int = 1, den: Int = 2): DataFrame = {
     require(num > 0 && den > 0 && num <= den, "threshold must be in (0, 1]")
@@ -190,8 +178,11 @@ object DedupStreams {
           .select(col("eval_id"), col("ea"), col("nsh"), col("need"),
             col("plen"), explode(expr("slice(ea, 1, plen)")).as("shingle"))
           .withColumn("bkt", graft.api.Dedup.containmentBucket(nBuckets))
-        arrivals.join(postings, Seq("bkt", "shingle"))
-          .join(docsArr, Seq("train_id"))
+        arrivals
+          .join(graft.PlanCache.memo(spark, path,
+            "stream_containment_postings")(postings), Seq("bkt", "shingle"))
+          .join(graft.PlanCache.memo(spark, path,
+            "stream_containment_docs")(docsArr), Seq("train_id"))
           // first-hit dedup: keep the collision whose shingle IS the
           // first prefix element present in the train doc's array (the
           // joined shingle is in ta by construction, so the filtered
@@ -229,6 +220,22 @@ object DedupStreams {
         round(col("i").cast("double") / col("nsh"), 6).as("containment"))
   }
 
+  /** Near-duplicate candidates of a document stream against the SAVED
+    * signature index at `path` (graft.api.Dedup.signatureIndexBuild):
+    * (<id>, corpus_id, est_jaccard ≥ minEst).
+    *
+    * The index is read as-is — already banded, already bucketed — so
+    * a fresh serving process never re-signs the corpus. For a BATCH
+    * arrival frame, the arrivals' band-bucket set (bounded by the
+    * index's nBuckets) is realized on the driver as a literal
+    * `bkt IN (...)` predicate, which Catalyst turns into
+    * PartitionFilters: only the touched bucket directories are ever
+    * read (the same pruning move as [[graft.api.Similarity.ivfTopK]]).
+    * A STREAMING frame cannot be collected, so the bucket is a join
+    * key instead, and the stream-static join reads the whole index
+    * from a [[graft.PlanCache]] memo of `path` (pinned once, refreshed
+    * by a same-session build or append at `path` — the PlanCache
+    * rule). */
   def nearDupsAgainstSavedIndex(stream: DataFrame, path: String,
       id: String, text: String, minEst: Double = 0.5): DataFrame = {
     val spark = stream.sparkSession
@@ -242,7 +249,8 @@ object DedupStreams {
         signRows(stream, id, text, n), id, "h")
       .withColumn("bkt", graft.api.Dedup.bandBucket(nBuckets))
     val prunedCorpus =
-      if (stream.isStreaming) corpus
+      if (stream.isStreaming)
+        graft.PlanCache.memo(spark, path, "stream_signature_bands")(corpus)
       else {
         val bkts = arrivals.select(col("bkt")).distinct()
           .collect().map(_.getInt(0)).toSeq
@@ -321,14 +329,20 @@ object DedupStreams {
     * semantics). Cross-ARRIVAL dedup is deliberately not claimed:
     * like nearDupsAgainstSavedIndex, arrivals probe the pre-built
     * index (bulk semantics) — fold a batch into the index with
-    * [[spanIndexBuild]] over the grown corpus when it lands. */
+    * [[spanIndexBuild]] over the grown corpus when it lands; a stream
+    * reads the spans through a [[graft.PlanCache]] memo of `path`, so
+    * that rebuild reaches the running query (the PlanCache rule). */
   def spansAgainstSavedIndex(stream: DataFrame, path: String,
       id: String, text: String): DataFrame = {
     val spark = stream.sparkSession
     val spanLen = spark.read.parquet(s"$path/meta")
       .head().getAs[Int]("span_len")
-    val idx = spark.read.parquet(s"$path/spans")
+    val idxRaw = spark.read.parquet(s"$path/spans")
       .select(col("span"), lit(true).as("in_base"))
+    val idx =
+      if (stream.isStreaming)
+        graft.PlanCache.memo(spark, path, "stream_span_spans")(idxRaw)
+      else idxRaw
     spanRows(stream, id, text, spanLen)
       .join(idx, Seq("span"), "left")
       .select(col(id), col("cidx"), col("span"), col("ctoks"),

@@ -28,19 +28,19 @@ object MultimodalStreams {
     * planning-time pruning of the probed band buckets (a bounded
     * collect — band×bk is at most 4×2^band_width entries).
     *
-    * `cacheStatic` (default on, streaming only): persist the saved
-    * band table MEMORY_AND_DISK so micro-batches after the first hit
-    * the block cache instead of re-scanning the index parquet —
+    * Both arms serve the saved band table from one
+    * [[graft.PlanCache]] memo of `path`, persisted MEMORY_AND_DISK.
     * Structured Streaming re-executes the static subplan every
-    * micro-batch, and this twin's measured 2.2 s p50 floor was
-    * exactly that re-scan (BASELINE.md round-14 table). Results are
-    * byte-identical (a cache is not a plan change); spill-safe on
-    * serving hosts because MEMORY_AND_DISK evicts to disk, never
-    * recomputes-from-scratch mid-batch. Pass false on memory-starved
-    * executors to keep the scan-per-batch behavior. */
+    * micro-batch, and this twin's measured 2.2 s p50 floor was exactly
+    * that re-scan (BASELINE.md round-14 table); on batch probes the
+    * bands layout fragments into one file per (bucket, build task),
+    * and the partition-pruned scan opened ~165 files for 1.8k rows per
+    * probe at sf0.1 (~2.5 s of the 5.9 s probe). The memo pays the
+    * fragmented scan once, many short-lived streams over one index
+    * share ONE pinned copy (released by PlanCache.evict/clear), and a
+    * rebuild or append at `path` refreshes it (the PlanCache rule). */
   def phashAgainstSavedIndex(stream: DataFrame, path: String,
-      id: String, payload: String, maxHamming: Int = 3,
-      cacheStatic: Boolean = true): DataFrame = {
+      id: String, payload: String, maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3,
       "4-band pigeonhole is exact only for Hamming <= 3")
     val spark = stream.sparkSession
@@ -48,28 +48,10 @@ object MultimodalStreams {
     val (bits, bw) =
       (meta.getAs[Int]("bits"), meta.getAs[Int]("band_width"))
     val mask = (1 << bw) - 1
-    val corpusRaw = spark.read.parquet(s"$path/bands")
-      .select(col("band"), col("bk"), col("id").as("corpus_id"),
-        col("simhash").as("s2"))
-    // PlanCache-memoized (not a bare persist): many short-lived
-    // streams over one index share ONE pinned copy, released by
-    // PlanCache.evict/clear (round-14 ADVICE)
-    val corpus =
-      if (stream.isStreaming && cacheStatic)
-        graft.PlanCache.memo(spark, path, "stream_phash_bands")(corpusRaw)
-      else if (cacheStatic)
-        // batch serving takes the NSW resident-index posture too (r18
-        // opt, guide §2.4): the bands layout fragments into one file
-        // per (bucket, build task) — the partition-pruned scan opened
-        // ~165 files for 1.8k rows per probe at sf0.1, and that scan
-        // dominated the serving path (measured ~2.5 s of the 5.9 s
-        // probe). The session memo pays the fragmented scan once
-        // (untimed prebuilt warm in the bench); every later probe
-        // filters the in-memory blocks. phashIndexBuild and
-        // phashIndexAppend drop the memo, so a rebuilt or grown index
-        // is never served stale.
-        graft.PlanCache.memo(spark, path, "phash_bands")(corpusRaw)
-      else corpusRaw
+    val corpus = graft.PlanCache.memo(spark, path, "phash_bands")(
+      spark.read.parquet(s"$path/bands")
+        .select(col("band"), col("bk"), col("id").as("corpus_id"),
+          col("simhash").as("s2")))
     // per-row fold on a live stream (no aggregate allowed); the
     // codegen'd aggregate twin on batch backfills (spec-pinned equal)
     val arrivalSigs =

@@ -33,7 +33,10 @@ object SampleStreams {
     * over a bounded static side: STATELESS, Append-safe, identical
     * code path for batch and streaming (the coverage readout a
     * coreset consumer needs — which exemplar represents each new
-    * arrival, and how far the coreset's radius has drifted). */
+    * arrival, and how far the coreset's radius has drifted). A
+    * stream reads the centers through a [[graft.PlanCache]] memo of
+    * `path`, so a same-session `kcenterIndexBuild` at `path` reaches
+    * the running query (the PlanCache rule). */
   def assignAgainstSavedCenters(stream: DataFrame, path: String,
       id: String, vec: String): DataFrame = {
     val spark = stream.sparkSession
@@ -60,9 +63,10 @@ object SampleStreams {
         // the ≤k centers ride ONE carried array column and the argmax
         // folds over it per row (bounded, so the struct-min is a pure
         // expression — no state, Append-safe)
-        val centerList = centers.groupBy().agg(collect_list(
-          struct(col("rank"), col("cid"), col("cv"), col("cnrm")))
-          .as("cs"))
+        val centerList = graft.PlanCache.memo(spark, path,
+            "stream_kcenter_centers")(centers)
+          .groupBy().agg(collect_list(struct(col("rank"), col("cid"),
+            col("cv"), col("cnrm"))).as("cs"))
         stream.select(col(id), col(vec).as("v"))
           .withColumn("nrm", expr("vec_norm(v)"))
           .filter(col("nrm") > 0)

@@ -27,9 +27,9 @@ object SimStreams {
 
   def rangeAgainstSavedIvfIndex(stream: DataFrame, id: String,
       vec: String, path: String, tau: Double,
-      nProbe: Int = 3, cacheStatic: Boolean = true): DataFrame =
+      nProbe: Int = 3): DataFrame =
     rangeMatchingAgainstSavedIvfIndex(stream, id, vec, path, tau,
-      nProbe, Nil, cacheStatic)
+      nProbe, Nil)
 
   /** [[rangeAgainstSavedIvfIndex]] with a METADATA MATCH against an
     * ATTRIBUTED index (graft.api.Similarity.ivfBuild with `attrs`):
@@ -42,30 +42,26 @@ object SimStreams {
     * keys on (cid, matchCols*) and the filter shrinks fan-out before
     * the cosine is ever computed.
     *
-    * `cacheStatic` (default on, streaming only): the saved cells are
-    * persisted MEMORY_AND_DISK — a stream cannot prune partitions
-    * with a planning-time collect, so without the cache every
-    * micro-batch re-scans the whole cells parquet (the measured
-    * phash-twin lesson, BASELINE.md round-15). The persist rides
-    * [[graft.PlanCache]] keyed on (session, index path, matchCols):
-    * a session that starts/stops many streams over one index pins ONE
-    * cached copy, not one per call, and `PlanCache.evict(session)` /
-    * `clear()` is the release path the harness mains already use
-    * (round-14 ADVICE). The centers ride a memo too: a running query
-    * keeps the file listing of every uncached static read, so an
-    * [[graft.api.Similarity.ivfBuild]] overwrite at `path` would fail
-    * its next micro-batch on deleted center files, while a cached read
-    * is re-listed and refilled by the write's path recache (spec-pinned
-    * in ServingMemoFreshnessSpec, with the cells after an append). */
+    * On a stream the saved cells and centers are served from
+    * [[graft.PlanCache]] memos of `path`, persisted MEMORY_AND_DISK: a
+    * stream cannot prune partitions with a planning-time collect, so
+    * without the cache every micro-batch re-scans the whole cells
+    * parquet (the measured phash-twin lesson, BASELINE.md round-15).
+    * A session that starts/stops many streams over one index pins ONE
+    * cached copy per matchCols, released by `PlanCache.evict(session)`
+    * / `clear()` (round-14 ADVICE). The memos also keep a running
+    * stream fresh: an [[graft.api.Similarity.ivfBuild]] or `ivfAppend`
+    * at `path` refreshes them (the PlanCache rule), where an uncached
+    * read would keep its first file listing. Batch frames read the
+    * index uncached. */
   def rangeMatchingAgainstSavedIvfIndex(stream: DataFrame, id: String,
       vec: String, path: String, tau: Double, nProbe: Int,
-      matchCols: Seq[String], cacheStatic: Boolean = true): DataFrame = {
+      matchCols: Seq[String]): DataFrame = {
     val spark = stream.sparkSession
     graft.functions.VectorExpressions.register(spark)
-    val memoStatic = stream.isStreaming && cacheStatic
     val centersRaw = spark.read.parquet(s"$path/centers")
     val centers =
-      if (memoStatic)
+      if (stream.isStreaming)
         graft.PlanCache.memo(spark, path, "stream_ivf_centers")(centersRaw)
       else centersRaw
     // per-row prep: double vector + norm (the Similarity.prep
@@ -89,7 +85,7 @@ object SimStreams {
         col("v").as("vb"), col("nrm").as("nb")) ++
         matchCols.map(col): _*)
     val cells =
-      if (memoStatic)
+      if (stream.isStreaming)
         graft.PlanCache.memo(spark, path,
           "stream_ivf_cells_" + matchCols.mkString(","))(cellsRaw)
       else cellsRaw

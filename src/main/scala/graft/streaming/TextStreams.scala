@@ -42,9 +42,12 @@ object TextStreams {
     * sorted gram array present in the eval doc's array), and n_shared
     * is the per-row `sorted_intersect_count` of the two carried
     * sorted arrays (exact at minNeeded = 0) — no aggregate, no
-    * watermark. The batch path produces the identical result from a
-    * SLIM (train_id, ngram) explode (arrays never ride the posting
-    * join) with the probed buckets pruned at planning time. */
+    * watermark; the stream reads grams and docs through
+    * [[graft.PlanCache]] memos of `path`, so a same-session
+    * `evalGramIndexBuild` at `path` reaches the running query (the
+    * PlanCache rule). The batch path produces the identical result
+    * from a SLIM (train_id, ngram) explode (arrays never ride the
+    * posting join), uncached. */
   def decontaminateAgainstSavedIndex(train: DataFrame, path: String,
       id: String, text: String): DataFrame = {
     val spark = train.sparkSession
@@ -60,8 +63,9 @@ object TextStreams {
       // for a stream's small micro-batches), candidate collisions
       // dedup by the first-hit rule, and n_shared is the per-row
       // sorted-merge count — no aggregate, no watermark
-      val evalArr = spark.read.parquet(s"$path/docs")
-        .select(col("eval_id"), col("eg_sorted").as("ta"))
+      val evalArr = graft.PlanCache.memo(spark, path, "stream_dcn_docs")(
+        spark.read.parquet(s"$path/docs")
+          .select(col("eval_id"), col("eg_sorted").as("ta")))
       val gramArr = array_sort(array_distinct(call_function(
         "word_ngrams", split(col(text), " "), lit(n))))
       train
@@ -70,7 +74,8 @@ object TextStreams {
         .select(col("train_id"), col("ea"),
           explode(col("ea")).as("ngram"))
         .withColumn("bkt", graft.api.Text.evalGramBucket(nBuckets))
-        .join(postings, Seq("bkt", "ngram"))
+        .join(graft.PlanCache.memo(spark, path, "stream_dcn_grams")(
+          postings), Seq("bkt", "ngram"))
         .join(evalArr, Seq("eval_id"))
         // first-hit dedup: the joined gram is in ta by construction,
         // so the filtered array is never empty
@@ -88,10 +93,8 @@ object TextStreams {
       // the saved grams instead of re-shingling the eval side. No
       // bucket key here: the bucket is a function of the gram, so the
       // ngram equi-join alone is correct, and skipping it saves an
-      // md5 per corpus gram plus the probed-bucket realization scan —
-      // bucket pruning is the MICRO-BATCH win (the streaming arm's
-      // posting join reads only the arrival grams' bucket
-      // directories), not the backfill's, which touches every bucket
+      // md5 per corpus gram plus the probed-bucket realization scan,
+      // and a backfill touches every bucket anyway
       train
         .select(col(id).as("train_id"),
           explode(call_function("word_ngrams",
