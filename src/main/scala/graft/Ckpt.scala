@@ -6,7 +6,8 @@ import org.apache.spark.sql.Dataset
   * kernel in the library (connected components, PageRank, k-core,
   * HITS, PQ sub-codebook rounds, BPE merge rounds, NN-Descent,
   * Holt-Winters unrolls, …). Coarse k-means is not among them: its
-  * k-row Lloyd state stays on the driver ([[graft.api.VecKMeans.train]]).
+  * k-row Lloyd state stays on the driver and each round is one Spark
+  * job with no lineage to cut ([[graft.api.VecKMeans.train]]).
   *
   * Iterative DataFrame algorithms must cut lineage once per round or
   * the plan tree (and closure serialization time) grows without

@@ -1,8 +1,11 @@
 package graft.api
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,8 +19,10 @@ import org.apache.spark.sql.types._
   *
   * Scale shape: the ≤ k centers live on the driver (plan literals in
   * [[train]] and [[assign]], one k-row broadcast in [[assignTopN]]),
-  * plus map-side-combining aggregates — nothing quadratic, nothing
-  * corpus-cardinality on a build side.
+  * and each Lloyd round is one Spark job whose per-partition cluster
+  * sums are reduced by cid on the executors ([[sumsByCid]]) — nothing
+  * quadratic, nothing corpus-cardinality on a build side or the
+  * driver.
   */
 object VecKMeans {
 
@@ -50,21 +55,6 @@ object VecKMeans {
       .withColumn("d2", expr(d2))
       .select(col("vec_id"), col("v"), col("cid"), col("d2"))
   }
-
-  /** per-(cid, pos) means of the assigned vectors, each dimension
-    * rounded to 8 places (the [[Graph.pageRank]] per-iteration
-    * discipline): double summation is order-dependent, so without
-    * the round an engine replaying the same Lloyd rounds sequentially
-    * (the DuckDB oracle behind `mining_kmeans` / `dedup_semantic`)
-    * drifts a few ULPs per round; rounding resets the drift each
-    * round so assignments — and therefore the trained quantizer — are
-    * reproducible cross-engine. At 8 places the perturbation
-    * (≤ 5e-9 per dimension) is far below any cluster geometry the
-    * quantizer can resolve. One map-side-combining aggregate; its
-    * k×dims rows are the next round's centers. */
-  private def means(assigned: DataFrame): DataFrame =
-    assigned.select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy(col("cid"), col("pos")).agg(round(avg(col("x")), 8).as("m"))
 
   /** top-n nearest centers per vector (IVF multi-cell probing): one
     * per-row codegen'd `vec_argmin_topn` projection over the
@@ -117,26 +107,102 @@ object VecKMeans {
     * degenerate all-null cluster) and >2³¹ longs would wrap and
     * collide, both silently.
     *
-    * The Lloyd state stays on the driver: each round is ONE query
-    * over `e` — argmin against the codebook literal, then the rounded
-    * [[means]] — whose k×dims rows (bounded by construction) are
-    * collected into the next cid-sorted codebook; a cluster that wins
-    * no vector drops out. Nothing is checkpointed or broadcast, every
+    * The Lloyd state stays on the driver: each round is ONE
+    * [[sumsByCid]] pass over `e` assigned against the codebook
+    * literal, and each next center is the per-position mean of its
+    * members rounded to 8 places (the [[Graph.pageRank]]
+    * per-iteration discipline): double summation is order-dependent,
+    * so without the round an engine replaying the same Lloyd rounds
+    * sequentially (the DuckDB oracle behind `mining_kmeans` /
+    * `dedup_semantic`) drifts a few ULPs per round; rounding resets
+    * the drift each round so assignments — and therefore the trained
+    * quantizer — are reproducible cross-engine. At 8 places the
+    * perturbation (≤ 5e-9 per dimension) is far below any cluster
+    * geometry the quantizer can resolve. A cluster that wins no
+    * vector drops out. Nothing is checkpointed or broadcast, every
     * round's plan is as shallow as the first, and training runs
-    * 1 + 2·rounds jobs (the seed collect, then a shuffle map stage and
-    * a result stage per round). */
+    * 1 + rounds jobs (the seed collect, then one per round). */
   def train(e: DataFrame, k: Int, rounds: Int): DataFrame = {
     val spark = e.sparkSession
     graft.functions.VectorExpressions.register(spark)
     val seed = e.orderBy(col("vec_id")).limit(k).select(col("v")).collect()
       .toSeq.zipWithIndex.map { case (r, cid) => (cid, r.getSeq[Double](0)) }
     val fin = (1 to rounds).foldLeft(seed) { (cs, _) =>
-      means(e.select(argmin(cs).as("cid"), col("v"))).collect().toSeq
-        .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-        .map { case (cid, rs) => (cid, rs.sortBy(_.getInt(1)).map(_.getDouble(2))) }
+      sumsByCid(e.select(argmin(cs).as("cid"), col("v"))).collect {
+        case (Some(cid), s) if s.sums.nonEmpty => (cid, s.means(cid))
+      }
     }
     spark.createDataFrame(
       fin.map { case (cid, c) => Row(cid, c) }.asJava, centersSchema)
+  }
+
+  /** One k-means pass as ONE Spark job, the MLlib KMeans shape: each
+    * partition folds its `(cid: int, xs: array<double>)` rows into a
+    * cid → [[Stats]] map, `reduceByKey` merges the partials on the
+    * executors, and only the ≤ k merged entries reach the driver
+    * (never P·k partials), sorted by cid with a null cid first. Per
+    * (cid, pos) it accumulates exactly what `avg`/`sum` over
+    * `posexplode(xs)` grouped by (cid, pos) would: null elements are
+    * skipped and shorter arrays simply contribute to fewer positions.
+    * The rows are read straight from the plan's RDD, so the job runs
+    * under the caller's job group but outside any SQL execution (no
+    * Catalyst phases are reported for it). */
+  private[graft] def sumsByCid(df: DataFrame): Seq[(Option[Int], Stats)] =
+    df.queryExecution.toRdd.mapPartitions { rows =>
+      val acc = mutable.HashMap.empty[Option[Int], Stats]
+      rows.foreach { r =>
+        // the row object is reused: read every field now
+        val cid = if (r.isNullAt(0)) None else Some(r.getInt(0))
+        acc.getOrElseUpdate(cid, new Stats)
+          .add(if (r.isNullAt(1)) null else r.getArray(1))
+      }
+      acc.iterator
+    }.reduceByKey(_ merge _).collect().toSeq.sortBy(_._1)
+
+  /** one cluster's statistics: its row count, and per position the
+    * sum and count of its non-null elements. */
+  private[graft] final class Stats extends Serializable {
+    var n = 0L
+    var sums = Array.emptyDoubleArray
+    var cnts = Array.emptyLongArray
+
+    def add(xs: ArrayData): Unit = {
+      n += 1
+      if (xs != null) {
+        grow(xs.numElements())
+        var i = 0
+        while (i < xs.numElements()) {
+          if (!xs.isNullAt(i)) { sums(i) += xs.getDouble(i); cnts(i) += 1 }
+          i += 1
+        }
+      }
+    }
+
+    def merge(o: Stats): Stats = {
+      n += o.n
+      grow(o.sums.length)
+      var i = 0
+      while (i < o.sums.length) {
+        sums(i) += o.sums(i); cnts(i) += o.cnts(i); i += 1
+      }
+      this
+    }
+
+    /** per-position mean rounded to 8 places by Spark's own `round`
+      * (HALF_UP on the double's decimal form), as `round(avg(x), 8)`
+      * computes it; a position with no non-null element (a null
+      * mean) has no center coordinate, so it is an error. */
+    def means(cid: Int): Seq[Double] = sums.indices.map { i =>
+      require(cnts(i) > 0,
+        s"VecKMeans: center $cid has only null elements at position $i")
+      Round(Literal(sums(i) / cnts(i)), Literal(8)).eval()
+        .asInstanceOf[Double]
+    }
+
+    private def grow(len: Int): Unit = if (len > sums.length) {
+      sums = java.util.Arrays.copyOf(sums, len)
+      cnts = java.util.Arrays.copyOf(cnts, len)
+    }
   }
 
   /** (cid, c) with nullable elements in `c`, as the rounded means

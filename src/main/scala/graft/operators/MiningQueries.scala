@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.{GQuery, PlanCache}
 import graft.sources.Tables
@@ -10,10 +13,10 @@ import graft.sources.Tables
 /** Data-mining staples of the big-data-coursework genre (SURVEY.md
   * §2.11 extras): market-basket co-occurrence and k-means clustering.
   *
-  * Both are plain DataFrame plans so Catalyst owns the physical
-  * strategy; k-means unrolls a FIXED number of Lloyd rounds
-  * (deterministic hash-free init: the k smallest vec_ids), keeping
-  * the whole computation declarative.
+  * The market-basket rows are plain DataFrame plans so Catalyst owns
+  * the physical strategy; k-means unrolls a FIXED number of Lloyd
+  * rounds (deterministic hash-free init: the k smallest vec_ids), each
+  * one Spark job of [[graft.api.VecKMeans]].
   */
 object MiningQueries {
 
@@ -146,11 +149,12 @@ object MiningQueries {
     * property-tests the invariants (sizes partition the corpus,
     * assignments are nearest-center, inertia non-increasing).
     *
-    * Scale shape: each round = one scan of the (cached) corpus
-    * against the driver-held k-center literal + one map-side-combining
-    * aggregate whose k×dims rows return to the driver; the final
-    * assignment is a projection plus the per-cell aggregate. Nothing
-    * quadratic, no window, no broadcast. */
+    * Scale shape: each round and the final per-cell summary is ONE
+    * Spark job — a scan of the (cached) corpus against the
+    * driver-held k-center literal whose per-partition per-cid sums
+    * are reduced on the executors ([[graft.api.VecKMeans.sumsByCid]]),
+    * so only k rows return to the driver; the k-row result is a local
+    * frame. Nothing quadratic, no window, no broadcast. */
   val miningKmeans: GQuery = {
     val k = 4
     val rounds = 3
@@ -166,11 +170,16 @@ object MiningQueries {
       // reach the final round's 0.5e-6 decision boundary — the
       // unrounded form was data-dependently flaky whenever sum(d2)
       // landed near a boundary.
-      assign(e, centers)
-        .groupBy(col("cid"))
-        .agg(count(lit(1)).as("n_members"),
-          (round(sum(round(col("d2"), 6)) * 1e6) / 1e6).as("inertia"))
-        .orderBy(col("cid"))
+      val cells = graft.api.VecKMeans.sumsByCid(
+        assign(e, centers).select(col("cid"), array(round(col("d2"), 6))))
+      // the k cid-sorted cells as a local frame; the final rounding is
+      // the same Spark expression the relational form applied to sum()
+      s.createDataFrame(cells.map { case (cid, st) =>
+          Row(cid.map(Int.box).orNull, st.n,
+            if (st.cnts(0) > 0) Double.box(st.sums(0)) else null)
+        }.asJava, cellsSchema)
+        .select(col("cid"), col("n_members"),
+          (round(col("s") * 1e6) / 1e6).as("inertia"))
     }
     GQuery("mining_kmeans",
       s"""${kmeansOracleCte(k, rounds)}
@@ -178,6 +187,13 @@ object MiningQueries {
          |  round(sum(round(d2, 6)) * 1e6) / 1e6 AS inertia
          |FROM fin GROUP BY cid ORDER BY cid""".stripMargin)(sparkImpl)
   }
+
+  /** (cid, n_members, s): the relational form's group key and count
+    * types, with the d2 sum still unrounded. */
+  private val cellsSchema = StructType(Seq(
+    StructField("cid", IntegerType),
+    StructField("n_members", LongType, nullable = false),
+    StructField("s", DoubleType)))
 
   private[operators] def assignTopN(
       e: DataFrame, centers: DataFrame, n: Int): DataFrame =
@@ -429,7 +445,12 @@ object MiningQueries {
       // fan-out is quadratic in basket width while the exchange's
       // input bytes are small, so AQE's byte-based coalescing would
       // serialize the pair blow-up onto a few slots (the multimodal
-      // phash pin discipline). Skew note: ck is basket-bounded
+      // phash pin discipline). A warm-iso A/B on 4 cores at sf0.1
+      // (plans/r20/mining_item_cf_pin_ab.txt) could not separate the
+      // pin from AQE's coalescing — medians 4.06 vs 4.36 s, unpinned
+      // faster in 4 of 6 pairs — so the pin stays for the fan-out
+      // bound above, which sf0.1's baskets are too narrow to show.
+      // Skew note: ck is basket-bounded
       // (uniform TPC-H custkeys; measured histogram in
       // OPTIMIZATION_r18.md) — a hot customer at corpus scale salts
       // exactly like join_skew_salted.

@@ -20,7 +20,7 @@ import graft.sources.Tables
   * center frames, a broadcast codebook row and a broadcast d2 rejoin.
   * Centers and distances must be bit-identical (the DuckDB replays of
   * mining_kmeans, dedup_semantic and the IVF builds depend on it), and
-  * training must stay at 1 + 2·rounds Spark jobs.
+  * training must stay at 1 + rounds Spark jobs.
   */
 class VecKMeansSpec extends SparkTestBase with Eventually {
   import spark.implicits._
@@ -42,6 +42,14 @@ class VecKMeansSpec extends SparkTestBase with Eventually {
       7L -> Seq(1.0, -1.0), 8L -> Seq(3.0, 0.5), 9L -> Seq(3.0, 0.5),
       10L -> Seq(-1.0, 0.25), 11L -> Seq(0.5, 0.5))
     .toDF("vec_id", "v")
+
+  /** `ties` with a null element in id 5 and id 11 shortened to one
+    * element: the means skip the null and average each position over
+    * the vectors that reach it. */
+  private lazy val raggedTies = ties.withColumn("v",
+    when(col("vec_id") === 5, array(lit(1.0), lit(null).cast("double")))
+      .when(col("vec_id") === 11, array(lit(0.5)))
+      .otherwise(col("v")))
 
   // the distributed form: smallest-id seeds ranked by a window, the
   // codebook row and the centers frame broadcast into each assignment,
@@ -87,7 +95,8 @@ class VecKMeansSpec extends SparkTestBase with Eventually {
 
   test("train returns the checkpointed-frame form's centers bit for bit") {
     for ((name, e, k, rounds) <- Seq(("embeddings", embeddings, 8, 3),
-        ("duplicates and ties", ties, 3, 3))) {
+        ("duplicates and ties", ties, 3, 3),
+        ("a null element and a shorter vector", raggedTies, 3, 3))) {
       val got = VecKMeans.train(e, k, rounds)
       val want = refTrain(e, k, rounds)
       assert(bits(got) == bits(want), s"$name: centers diverged")
@@ -108,20 +117,19 @@ class VecKMeansSpec extends SparkTestBase with Eventually {
     }
   }
 
-  test("train runs at most 1 + 2·rounds Spark jobs") {
+  /** the Spark jobs `body` runs: the listener bus delivers in order,
+    * so once a sentinel job is seen every job of `body` is counted. */
+  private def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
     val groups = new ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
     }
-    val rounds = 3
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup("veckmeans-train", "train")
-      VecKMeans.train(embeddings, 8, rounds)
-      // the listener bus delivers in order: once the sentinel job is
-      // seen, every training job has been counted
+      sc.setJobGroup("veckmeans-body", "body")
+      body
       sc.setJobGroup("veckmeans-sentinel", "sentinel")
       spark.range(4).count()
       sc.clearJobGroup()
@@ -129,8 +137,37 @@ class VecKMeansSpec extends SparkTestBase with Eventually {
         assert(groups.contains("veckmeans-sentinel"))
       }
     } finally sc.removeSparkListener(listener)
-    val jobs = groups.asScala.count(_ == "veckmeans-train")
-    assert(jobs >= 1 && jobs <= 1 + 2 * rounds,
+    groups.asScala.count(_ == "veckmeans-body")
+  }
+
+  test("train runs at most 1 + rounds Spark jobs") {
+    val rounds = 3
+    val jobs = jobsOf(VecKMeans.train(embeddings, 8, rounds))
+    assert(jobs >= 1 && jobs <= 1 + rounds,
       s"train(rounds = $rounds) ran $jobs jobs")
+  }
+
+  test("mining_kmeans runs at most 7 jobs and equals the relational form") {
+    val q = graft.operators.MiningQueries.miningKmeans
+    q.fn(spark, sfDir).count() // builds the kmeans_vecs memo
+    val jobs = jobsOf(q.fn(spark, sfDir).count())
+    assert(jobs >= 1 && jobs <= 7, s"mining_kmeans ran $jobs jobs")
+    // the relational per-cell summary over the same memoized corpus
+    // and the query's own k = 4, rounds = 3
+    val e = graft.PlanCache.memo(spark, sfDir, "kmeans_vecs")(
+      fail("mining_kmeans did not memoize its corpus"))
+    val want = VecKMeans.assign(e, VecKMeans.train(e, 4, 3))
+      .groupBy(col("cid"))
+      .agg(count(lit(1)).as("n_members"),
+        (round(sum(round(col("d2"), 6)) * 1e6) / 1e6).as("inertia"))
+      .orderBy(col("cid"))
+    val got = q.fn(spark, sfDir)
+    def rows(df: DataFrame): Seq[(Int, Long, Long)] =
+      df.as[(Int, Long, Double)].collect().toSeq.map { case (cid, n, in) =>
+        (cid, n, java.lang.Double.doubleToRawLongBits(in))
+      }
+    assert(rows(got) == rows(want))
+    // names, types and nullability
+    assert(got.schema == want.schema)
   }
 }
