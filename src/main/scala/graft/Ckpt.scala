@@ -4,10 +4,10 @@ import org.apache.spark.sql.Dataset
 
 /** The ONE lineage-truncation policy switch for every iterative
   * kernel in the library (connected components, PageRank, k-core,
-  * HITS, PQ sub-codebook rounds, BPE merge rounds, NN-Descent,
-  * Holt-Winters unrolls, …). Coarse k-means is not among them: its
-  * k-row Lloyd state stays on the driver and each round is one Spark
-  * job with no lineage to cut ([[graft.api.VecKMeans.train]]).
+  * HITS, BPE merge rounds, NN-Descent, Holt-Winters unrolls, …).
+  * k-means is not among them, coarse centers and IVF-PQ sub-codebooks
+  * alike: its Lloyd state stays on the driver and each round is one
+  * Spark job with no lineage to cut ([[graft.api.VecKMeans.lloydStep]]).
   *
   * Iterative DataFrame algorithms must cut lineage once per round or
   * the plan tree (and closure serialization time) grows without

@@ -1,8 +1,11 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.Ckpt.CkptOps
 
 /** IVF-PQ: the memory-compressed ANN serving path (Jégou/Douze/Schmid,
@@ -18,10 +21,14 @@ import graft.Ckpt.CkptOps
   * the standard codes-in-memory / vectors-on-disk serving config, so
   * recall is bounded by cell recall, not PQ resolution.
   *
-  * All stages are the bounded-broadcast shapes the policy allows:
-  * codebooks are m·ksub rows, probe tables |probes|·m·ksub rows; the
-  * corpus is scanned once at build and partition-pruned at probe time
-  * (same mechanism as [[Similarity.ivfTopK]], proven in IvfIndexSpec).
+  * Both quantizers train by [[VecKMeans]]' one Lloyd rule, with their
+  * ≤ k centers and m·ksub codebook rows on the driver as plan
+  * literals, so [[build]] and [[append]] never join the corpus: a
+  * vector's cell row is one per-row projection, and the only exchange
+  * is the cells write's rebalance by cid. Serving uses bounded
+  * broadcasts (probe tables are |probes|·m·ksub rows), and the cells
+  * are partition-pruned at probe time (same mechanism as
+  * [[Similarity.ivfTopK]], proven in IvfIndexSpec).
   */
 object IvfPq {
 
@@ -46,79 +53,39 @@ object IvfPq {
     // IvfPqSpec's compression assertion) rests on
     require(ksub > 0 && ksub <= 256,
       s"ksub=$ksub must be in 1..256 (codes are one byte each)")
-    graft.functions.VectorExpressions.register(corpus.sparkSession)
-    // materialize the prepared corpus ONCE: seeds, coarse training,
-    // sub-vector explode and the final assignment all re-read it, and
-    // re-evaluating the caller's lineage per consumer dominated build
-    // time. A build pass that scans the corpus once is the contract.
-    val e = corpus.select(col(id).as("vec_id"), col(vec).as("v"))
-      .withColumn("nrm", expr("vec_norm(v)"))
-      .ckpt()
-    val dim = e.select(size(col("v"))).first().getInt(0)
+    val spark = corpus.sparkSession
+    graft.functions.VectorExpressions.register(spark)
+    // materialize the prepared corpus ONCE: both trainings and the
+    // encode re-read it, and re-evaluating the caller's lineage per
+    // consumer dominated build time
+    val ev = corpus.select(col(id).as("vec_id"), col(vec).as("v")).ckpt()
+    val dim = ev.select(size(col("v"))).first().getInt(0)
     require(dim % m == 0, s"dimension $dim not divisible by m=$m")
     val subDim = dim / m
-    val ev = e.select(col("vec_id"), col("v"))
     val centers = VecKMeans.train(ev, k, rounds)
     centers.write.mode("overwrite").parquet(s"$path/centers")
-    // per-subspace codebooks, trained JOINTLY: keying every frame by
-    // (s, code) lets all m Lloyd iterations advance in the same two
-    // aggregates per round — identical math to m independent trainings
-    // (same smallest-id seeds, same (d2, code) tie-break), but ~2 jobs
-    // per round instead of ~6·m
-    val subs = subVectors(ev, m, subDim).ckpt()
-    // seed codes are the RANK among the ksub smallest ids (0..ksub−1),
-    // never a cast of the id value (see VecKMeans.train) — this
-    // is also what keeps every PQ code < 256 regardless of id space
-    val seedIds = ev.orderBy(col("vec_id")).limit(ksub)
-      .select(col("vec_id"),
-        (row_number().over(Window.orderBy(col("vec_id"))) - 1)
-          .cast("int").as("code"))
-    var cb = subs.join(broadcast(seedIds), Seq("vec_id"))
-      .select(col("s"), col("code"), col("sub").as("c"))
-      .ckpt()
-    // each subspace's whole codebook folded into ONE code-sorted array
-    // row, so assignment is a per-row codegen'd argmin
-    // (vec_argmin_code — bit-identical to the former ksub-way
-    // candidate join + min(struct(d2, code)) aggregate, see the
-    // expression's scaladoc) instead of a |subs|·ksub row explosion
-    // plus re-aggregation shuffle per Lloyd round: the 100× probe
-    // measured the join form at 112 s for 200k vectors, ~all of it
-    // this explosion
-    def cbArrays(codebook: DataFrame): DataFrame = codebook
-      .groupBy(col("s"))
-      .agg(sort_array(collect_list(struct(col("code"), col("c"))))
-        .as("cbs"))
-    def assignSubs(codebook: DataFrame): DataFrame = subs
-      .join(broadcast(cbArrays(codebook)), Seq("s"))
-      .select(col("vec_id"), col("s"),
-        expr("vec_argmin_code(sub, cbs)").as("code"), col("sub"))
-    for (_ <- 1 to rounds) {
-      cb = assignSubs(cb)
-        .select(col("s"), col("code"),
-          posexplode(col("sub")).as(Seq("pos", "x")))
-        .groupBy(col("s"), col("code"), col("pos"))
-        // 8-place rounding per Lloyd round — the VecKMeans.train
-        // discipline: double summation is order-dependent, so without
-        // it an engine replaying the rounds sequentially (the DuckDB
-        // oracle behind sim_topk_ivfpq) drifts ULPs per round and the
-        // trained codebooks stop being a reproducible relation
-        .agg(round(avg(col("x")), 8).as("mv"))
-        .groupBy(col("s"), col("code"))
-        .agg(expr("transform(array_sort(collect_list(struct(pos, mv))), " +
-          "q -> q.mv)").as("c"))
-        .ckpt()
+    // the m sub-codebooks train as ONE run of VecKMeans' Lloyd rule
+    // keyed s·ksub + code — the math of m independent trainings, one
+    // job per round. A seed's rank is its first code (never a cast of
+    // the id value, see VecKMeans.train), so every code < ksub ≤ 256.
+    val seeds = VecKMeans.seeds(ev, ksub).zipWithIndex
+    val seeded = (0 until m).map(s => seeds.map {
+      case (v, code) => (code, v.slice(s * subDim, (s + 1) * subDim))
+    })
+    val subs = subVectors(ev, m, subDim)
+    val cbs = (1 to rounds).foldLeft(seeded) { (prev, _) =>
+      val step = VecKMeans.lloydStep(subs.select(
+        (col("s") * ksub + nearest(col("sub"), prev, col("s"))).as("key"),
+        col("sub")))
+      (0 until m).map(s => step.collect {
+        case (key, c) if key / ksub == s => (key % ksub, c)
+      })
     }
-    cb.write.mode("overwrite").parquet(s"$path/codebooks")
-    // encode: nearest sub-centroid per (vector, subspace) against the
-    // final codebooks, collected into one m-length code array
-    val encoded = assignSubs(cb)
-      .groupBy(col("vec_id"))
-      .agg(expr("transform(array_sort(collect_list(struct(s, code))), " +
-        "p -> CAST(p.code AS INT))").as("codes"))
-    VecKMeans.assign(ev, centers)
-      .join(e.select(col("vec_id"), col("nrm")), Seq("vec_id"))
-      .join(encoded, Seq("vec_id"))
-      .select(col("cid"), col("vec_id"), col("v"), col("nrm"), col("codes"))
+    // ≤ m·256 rows: one file
+    spark.createDataFrame((for ((cb, s) <- cbs.zipWithIndex;
+          (code, c) <- cb) yield Row(s, code, c)).asJava, codebookSchema)
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+    cells(ev, centers, cbs, subDim)
       .write.mode("overwrite").partitionBy("cid").parquet(s"$path/cells")
   }
 
@@ -128,54 +95,62 @@ object IvfPq {
     * retrained — the standard serving trade, same as
     * [[Similarity.ivfAppend]]: resolution degrades slowly, a periodic
     * rebuild restores it), then appended to the cid-partitioned
-    * layout — only the touched partitions gain files. */
+    * layout — only the touched partitions gain files. Like
+    * [[VecKMeans.assign]], each input row gives one cell row:
+    * callers own id uniqueness. */
   def append(newVecs: DataFrame, id: String, vec: String,
       path: String): Unit = {
     val spark = newVecs.sparkSession
     graft.functions.VectorExpressions.register(spark)
     val centers = spark.read.parquet(s"$path/centers")
-    val codebooks = spark.read.parquet(s"$path/codebooks")
-    val dims = codebooks
-      .agg(countDistinct(col("s")), max(size(col("c")))).first()
-    val m = dims.getLong(0).toInt
-    val subDim = dims.getInt(1)
-    val e = newVecs.select(col(id).as("vec_id"), col(vec).as("v"))
-      .withColumn("nrm", expr("vec_norm(v)"))
-      .ckpt()
+    // the m·ksub saved codebook rows, once: they give the encoder its
+    // literal and the index its dimensions (m, subDim)
+    val cbs = spark.read.parquet(s"$path/codebooks")
+      .select(col("s"), col("code"), col("c")).collect().toSeq
+      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+      .map(_._2.map(r => (r.getInt(1), r.getSeq[Double](2))).sortBy(_._1))
+    val m = cbs.size
+    val subDim = cbs.flatten.map(_._2.size).max
+    val ev = newVecs.select(col(id).as("vec_id"), col(vec).as("v")).ckpt()
     // GUARD (mirrors build's dim % m check): every arrival must match
     // the saved index's dimension m·subDim. Without this, a wrong-dim
-    // arrival is silently slice-truncated by subVectors, encoded
+    // arrival is silently slice-truncated by the encoder, encoded
     // against mismatched codebooks, and appended — poisoning the
     // cells table for every later probe with no error anywhere. The
     // whole append fails BEFORE anything is written (the write below
     // is the first action against the index).
     val dim = m * subDim
-    val dimRange = e.agg(min(size(col("v"))), max(size(col("v")))).first()
+    val dimRange = ev.agg(min(size(col("v"))), max(size(col("v")))).first()
     if (!dimRange.isNullAt(0))
       require(dimRange.getInt(0) == dim && dimRange.getInt(1) == dim,
         s"append vectors have dimension(s) ${dimRange.getInt(0)}.." +
           s"${dimRange.getInt(1)} but the saved index at $path expects " +
           s"$dim (m=$m × subDim=$subDim); rejecting the whole batch")
-    val ev = e.select(col("vec_id"), col("v"))
-    // encode: nearest saved sub-centroid per (vector, subspace) —
-    // same (d2, code) tie-break as build's assignSubs, via the same
-    // per-row argmin expression (no ksub-way candidate join)
-    val cbArr = codebooks.groupBy(col("s"))
-      .agg(sort_array(collect_list(struct(col("code"), col("c"))))
-        .as("cbs"))
-    val encoded = subVectors(ev, m, subDim)
-      .join(broadcast(cbArr), Seq("s"))
-      .select(col("vec_id"), col("s"),
-        expr("vec_argmin_code(sub, cbs)").as("code"))
-      .groupBy(col("vec_id"))
-      .agg(expr("transform(array_sort(collect_list(struct(s, code))), " +
-        "p -> CAST(p.code AS INT))").as("codes"))
-    VecKMeans.assign(ev, centers)
-      .join(e.select(col("vec_id"), col("nrm")), Seq("vec_id"))
-      .join(encoded, Seq("vec_id"))
-      .select(col("cid"), col("vec_id"), col("v"), col("nrm"), col("codes"))
+    cells(ev, centers, cbs, subDim)
       .write.mode("append").partitionBy("cid").parquet(s"$path/cells")
   }
+
+  /** the code of `sub` in subspace `s`: its nearest centroid in the
+    * code-sorted codebook `cbs(s)`, a plan literal. */
+  private def nearest(sub: Column, cbs: Seq[Seq[(Int, Seq[Double])]],
+      s: Column): Column =
+    call_function("vec_argmin_code", sub, element_at(typedLit(cbs), s + 1))
+
+  /** the (cid, vec_id, v, nrm, codes) cells rows of `ev` as ONE
+    * per-row projection, shared by [[build]] and [[append]], rebalanced
+    * by cid so each written cell holds AQE-sized files (one per cell
+    * at small scale) instead of one per input partition. */
+  private def cells(ev: DataFrame, centers: DataFrame,
+      cbs: Seq[Seq[(Int, Seq[Double])]], subDim: Int): DataFrame =
+    VecKMeans.assign(ev, centers).select(col("cid"), col("vec_id"),
+      col("v"), expr("vec_norm(v)").as("nrm"),
+      transform(sequence(lit(0), lit(cbs.size - 1)), s => nearest(
+        slice(col("v"), s * subDim + 1, lit(subDim)), cbs, s)).as("codes"))
+      .hint("rebalance", col("cid"))
+
+  /** the saved `codebooks/` layout. */
+  private val codebookSchema = StructType(Seq(StructField("s", IntegerType),
+    StructField("code", IntegerType), StructField("c", ArrayType(DoubleType))))
 
   /** Approximate top-k cosine over a saved [[build]] index:
     * (probe_id, rk, neighbor_id, cosine — EXACT, from the re-rank).

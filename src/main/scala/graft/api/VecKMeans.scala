@@ -10,7 +10,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Public coarse k-means over vector frames — the quantizer behind
-  * `mining_kmeans` and the IVF index ([[Similarity.ivfBuild]]).
+  * `mining_kmeans` and the IVF index ([[Similarity.ivfBuild]]) — and
+  * the ONE Lloyd rule of the library: every quantizer (these coarse
+  * centers and IVF-PQ's product sub-codebooks, [[IvfPq.build]]) seeds
+  * with [[seeds]] and recenters with [[lloydStep]], so one kernel and
+  * one rounding rule are all the DuckDB replays have to agree with.
   *
   * Column contract (fixed, unlike the caller-named id/text modules:
   * these frames are engine-internal intermediates): input is
@@ -125,16 +129,29 @@ object VecKMeans {
   def train(e: DataFrame, k: Int, rounds: Int): DataFrame = {
     val spark = e.sparkSession
     graft.functions.VectorExpressions.register(spark)
-    val seed = e.orderBy(col("vec_id")).limit(k).select(col("v")).collect()
-      .toSeq.zipWithIndex.map { case (r, cid) => (cid, r.getSeq[Double](0)) }
+    val seed = seeds(e, k).zipWithIndex.map { case (c, cid) => (cid, c) }
     val fin = (1 to rounds).foldLeft(seed) { (cs, _) =>
-      sumsByCid(e.select(argmin(cs).as("cid"), col("v"))).collect {
-        case (Some(cid), s) if s.sums.nonEmpty => (cid, s.means(cid))
-      }
+      lloydStep(e.select(argmin(cs).as("cid"), col("v")))
     }
     spark.createDataFrame(
       fin.map { case (cid, c) => Row(cid, c) }.asJava, centersSchema)
   }
+
+  /** The seed rule: the vectors of the k smallest ids, id-ordered, so
+    * a seed's rank (0..k−1) is its first center id or code. One Spark
+    * job. */
+  private[graft] def seeds(e: DataFrame, k: Int): Seq[Seq[Double]] =
+    e.orderBy(col("vec_id")).limit(k).select(col("v")).collect()
+      .toSeq.map(_.getSeq[Double](0))
+
+  /** One Lloyd step over a `(key: int, xs: array<double>)` frame of
+    * assigned rows, as ONE [[sumsByCid]] job: the key-sorted rounded
+    * means ([[Stats.means]]) of the keys that won a row — a cluster
+    * that wins nothing drops out, and so does a null key. */
+  private[graft] def lloydStep(df: DataFrame): Seq[(Int, Seq[Double])] =
+    sumsByCid(df).collect {
+      case (Some(key), s) if s.sums.nonEmpty => (key, s.means(key))
+    }
 
   /** One k-means pass as ONE Spark job, the MLlib KMeans shape: each
     * partition folds its `(cid: int, xs: array<double>)` rows into a

@@ -172,12 +172,15 @@ object MiningQueries {
       // landed near a boundary.
       val cells = graft.api.VecKMeans.sumsByCid(
         assign(e, centers).select(col("cid"), array(round(col("d2"), 6))))
-      // the k cid-sorted cells as a local frame; the final rounding is
-      // the same Spark expression the relational form applied to sum()
+      // the k cid-sorted cells as a local frame in ONE partition (a
+      // count of it is then one job, not a partial/final aggregate
+      // pair); the final rounding is the same Spark expression the
+      // relational form applied to sum()
       s.createDataFrame(cells.map { case (cid, st) =>
           Row(cid.map(Int.box).orNull, st.n,
             if (st.cnts(0) > 0) Double.box(st.sums(0)) else null)
         }.asJava, cellsSchema)
+        .coalesce(1)
         .select(col("cid"), col("n_members"),
           (round(col("s") * 1e6) / 1e6).as("inertia"))
     }

@@ -1,15 +1,8 @@
 package graft.api
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.concurrent.Eventually
-import org.scalatest.time.SpanSugar._
 
 import graft.Ckpt.CkptOps
 import graft.SparkTestBase
@@ -22,7 +15,7 @@ import graft.sources.Tables
   * mining_kmeans, dedup_semantic and the IVF builds depend on it), and
   * training must stay at 1 + rounds Spark jobs.
   */
-class VecKMeansSpec extends SparkTestBase with Eventually {
+class VecKMeansSpec extends SparkTestBase {
   import spark.implicits._
 
   private lazy val embeddings = {
@@ -117,29 +110,6 @@ class VecKMeansSpec extends SparkTestBase with Eventually {
     }
   }
 
-  /** the Spark jobs `body` runs: the listener bus delivers in order,
-    * so once a sentinel job is seen every job of `body` is counted. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("veckmeans-body", "body")
-      body
-      sc.setJobGroup("veckmeans-sentinel", "sentinel")
-      spark.range(4).count()
-      sc.clearJobGroup()
-      eventually(timeout(30.seconds)) {
-        assert(groups.contains("veckmeans-sentinel"))
-      }
-    } finally sc.removeSparkListener(listener)
-    groups.asScala.count(_ == "veckmeans-body")
-  }
-
   test("train runs at most 1 + rounds Spark jobs") {
     val rounds = 3
     val jobs = jobsOf(VecKMeans.train(embeddings, 8, rounds))
@@ -147,11 +117,11 @@ class VecKMeansSpec extends SparkTestBase with Eventually {
       s"train(rounds = $rounds) ran $jobs jobs")
   }
 
-  test("mining_kmeans runs at most 7 jobs and equals the relational form") {
+  test("mining_kmeans runs at most 6 jobs and equals the relational form") {
     val q = graft.operators.MiningQueries.miningKmeans
     q.fn(spark, sfDir).count() // builds the kmeans_vecs memo
     val jobs = jobsOf(q.fn(spark, sfDir).count())
-    assert(jobs >= 1 && jobs <= 7, s"mining_kmeans ran $jobs jobs")
+    assert(jobs >= 1 && jobs <= 6, s"mining_kmeans ran $jobs jobs")
     // the relational per-cell summary over the same memoized corpus
     // and the query's own k = 4, rounds = 3
     val e = graft.PlanCache.memo(spark, sfDir, "kmeans_vecs")(
